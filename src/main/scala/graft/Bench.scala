@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Perf harness: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints per-query timings incrementally plus ONE final aggregate JSON
@@ -32,7 +31,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ >= 1).getOrElse(2)
     val deadlineSec = sys.env.get("SPARK_GRAFT_BENCH_DEADLINE_SEC")
@@ -42,19 +40,10 @@ object Bench {
     def overDeadline = elapsedSec > deadlineSec
     // Optional comma-separated name filter for isolating single queries
     // (perf triage); the driver never sets it, so driver runs time all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = QueryLoop.select(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = Engine.session(appName = "graft-bench")
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.mode("overwrite").format("noop").save()
     // JIT/codegen warmup: run everything once at the smallest sf so the
     // timed loop measures steady-state plans, not first-query JVM
     // compilation. Skipped if the bench target IS the smallest sf
@@ -68,13 +57,8 @@ object Bench {
     val warmBudget = math.min(deadlineSec * 0.25, 150.0)
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      selected.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        if (elapsedSec < warmBudget) {
-          try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-          catch { case _: Throwable => () }
-          graft.operators.SessionCache.release()
-        }
-      }
+      QueryLoop.run("bench-warmup", selected.toSeq.sortBy(_._1),
+          stop = elapsedSec >= warmBudget) { (_, fn) => noop(fn(spark, warmDir)) }
       // evict the warmup-scale materializations: the timed loop should
       // own the block manager
       graft.queries.TestdataAdapter.clearCache(spark, warmDir)
@@ -140,28 +124,16 @@ object Bench {
       val acc = scala.collection.mutable.LinkedHashMap.empty[String, Double]
       val order0 = selected.toSeq.sortBy(_._1)
       val order = if (pass % 2 == 0) order0.reverse else order0
-      order.foreach { case (name, fn) =>
-        if (!overDeadline) {
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-              failed += name
-              false
-            }
+      failed ++= QueryLoop.run("bench", order, stop = overDeadline) { (name, fn) =>
+        val t0 = System.nanoTime()
+        var ok = false
+        try { noop(fn(spark, sfDir)); ok = true }
+        finally {
           val t = (System.nanoTime() - t0) / 1e9
           acc(name) = if (ok) t else Double.MaxValue
           // Double.toString always uses '.', locale-proof.
           println(s"""{"query":"$name","pass":$pass,"sec":${if (ok) t else -1.0}}""")
           Console.out.flush()
-          // Release the query's registered persists OUTSIDE the timed
-          // region (round-17): operator-internal substrate caches are
-          // query-lifetime; leaving them pinned accumulated into
-          // block-manager pressure that slowed late-running queries
-          // 3-4x vs their isolated cost. The session mart cache is
-          // exempt by construction (it never registers here).
-          graft.operators.SessionCache.release()
         }
       }
       acc.toMap

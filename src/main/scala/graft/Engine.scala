@@ -22,44 +22,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Engine {
 
-  def session(
-      master: String = "local[*]",
-      shufflePartitions: Int = 32,
-      appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
-      .appName(appName)
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // size-based coalescing, not parallelism-floor — see configure()
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // RocksDB state store: bounded executor memory for streaming
-      // state (the HDFS-backed default keeps every key on-heap), and
-      // required by transformWithState (StreamingCuration's claimant
-      // stage uses its event-time timers + chained aggregation).
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Apply graft's semantic configs to an externally-built session
-    * (Verify/Bench build their own). Idempotent, cheap.
+  /** Local cores and shuffle partitions for a session whose caller
+    * names none: `SPARK_GRAFT_CPUS`, default 4. The one place that
+    * reads it.
     */
-  def configure(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ >= 1)
+    .getOrElse(4)
+
+  /** graft's semantic SQL confs: [[session]] sets them at build time,
+    * [[configure]] at run time.
+    */
+  val confs: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     // Size-based AQE coalescing (round-17, guide §2.2): the default
     // parallelismFirst=true refuses to coalesce below the core count,
     // so every post-shuffle stage of a small intermediate still
@@ -71,26 +47,52 @@ object Engine {
     // and the only scale-correct choice: at 100 TB the advisory size
     // spreads a shuffle over thousands of tasks, while a 5 MB verdict
     // frame collapses to one.
-    spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.ansi.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC",
     // The driver's events.parquet carries INT64 TIMESTAMP(NANOS), which
     // Spark 4 refuses to read as a timestamp; with this legacy flag the
     // column surfaces as a nanos-since-epoch Long and Tables.events
     // converts it to a microsecond timestamp.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // RocksDB state store: bounded executor memory for streaming
+    // state (the HDFS-backed default keeps every key on-heap), and
+    // required by transformWithState (StreamingCuration's claimant
+    // stage uses its event-time timers + chained aggregation).
+    "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // externally-built sessions (Verify/Bench) miss the withExtensions
-    // hook — register graft's SQL functions in place
+
+  /** The one way to build a graft session: [[confs]], graft's SQL
+    * functions and the MV-navigation optimizer rule (both through
+    * [[graft.functions.GraftExtensions]]).
+    */
+  def session(
+      master: String = s"local[$cpus]",
+      shufflePartitions: Int = cpus,
+      appName: String = "graft"): SparkSession = {
+    val spark = confs
+      .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .master(master)
+      .appName(appName)
+      .withExtensions(new graft.functions.GraftExtensions)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Apply [[confs]], the SQL functions and the MV-navigation rule to
+    * a session someone else built (the driver's, via
+    * [[SparkEntry.entry]]). Idempotent, cheap: a session that already
+    * holds the rule — an [[session]] one — gets no second copy.
+    */
+  def configure(spark: SparkSession): SparkSession = {
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     graft.functions.GraftFunctions.register(spark)
-    // ... and the MV-navigation optimizer rule (extraOptimizations is
-    // the post-build injection point; idempotent across configure
-    // calls, dormant while MvCatalog is empty)
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.AggregateRewriteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+
-          new graft.plans.AggregateRewriteRule(spark)
+    org.apache.spark.sql.graftbridge.ColumnBridge
+      .addOptimizerRules(spark, new graft.functions.GraftExtensions)
     spark
   }
 }

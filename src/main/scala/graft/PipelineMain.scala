@@ -25,8 +25,7 @@ object PipelineMain {
     val date = if (args.length > 1) LocalDate.parse(args(1)) else LocalDate.now()
     val apiBase = if (args.length > 2) Some(args(2)) else None
 
-    val spark = Engine.session(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+    val spark = Engine.session(appName = "graft-pipeline")
     val p = new Pipeline(spark, warehouse)
 
     val (rawJson, dimSource) = apiBase match {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Derive a larger scale factor from the biggest driver-provided one,
@@ -50,13 +49,7 @@ object ScaleData {
     val factor = sys.env.get("SPARK_GRAFT_SCALE")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ > 1)
       .getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(appName = "graft-scaledata")
     import spark.implicits._
 
     new java.io.File(dst).mkdirs()

@@ -18,14 +18,7 @@ import org.apache.spark.sql.functions._
 object ScaleEvidence {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(appName = "graft-scaleevidence")
 
     def timeIt(body: => Long): (Double, Long) = {
       def once(): (Double, Long) = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured evidence that the skew escape hatches WIN under a planted
@@ -47,16 +47,9 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ >= 1).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session(appName = "graft-skewbench")
     import spark.implicits._
 
     def report(name: String, secs: Seq[Double], extra: String = ""): Unit = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -23,34 +22,12 @@ object Verify {
     }
     deleteRec(new java.io.File(artifactDir))
     System.setProperty("graft.artifact.dir", artifactDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Engine.configure(spark) // ANSI off, UTC, nanos flag — the gate must
-    spark.sparkContext.setLogLevel("WARN") // run the engine's semantics
+    val spark = Engine.session(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated name filter (local triage only — the
-    // driver never sets it, so driver runs dump every query).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val selected = QueryLoop.select(sys.env.get("SPARK_GRAFT_ONLY")).toSeq
+    val failed = QueryLoop.run("verify", selected) { (name, fn) =>
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // drop the query's registered operator-internal persists — the
-      // round-17 Bench discipline (leaked substrate caches slow the
-      // tail of a 267-query session; the mart cache never registers)
-      graft.operators.SessionCache.release()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -67,6 +44,10 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // exit 0 regardless (the driver's compare judges each dump); one
+    // summary line so a local run needs no log scan
+    System.err.println(
+      s"[verify] failed ${failed.size}/${selected.size}: ${failed.mkString(",")}")
     spark.stop()
   }
 }

@@ -20,162 +20,48 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // materialized-aggregate navigation (dormant while MvCatalog is
     // empty — see graft.plans.MaterializedAggregate)
     ext.injectOptimizerRule(session => new graft.plans.AggregateRewriteRule(session))
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      GraftFunctions.vecDotInfo,
-      GraftFunctions.vecDotBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("int_vec_dot"),
-      GraftFunctions.intVecDotInfo,
-      GraftFunctions.intVecDotBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("sum_at_min"),
-      GraftFunctions.sumAtMinInfo,
-      GraftFunctions.sumAtMinBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("kmin_values"),
-      GraftFunctions.kminValuesInfo,
-      GraftFunctions.kminValuesBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("count_min"),
-      GraftFunctions.countMinInfo,
-      GraftFunctions.countMinBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("hyper_log_log"),
-      GraftFunctions.hyperLogLogInfo,
-      GraftFunctions.hyperLogLogBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      GraftFunctions.nfcNormalizeInfo,
-      GraftFunctions.nfcNormalizeBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("reservoir_keys"),
-      GraftFunctions.reservoirKeysInfo,
-      GraftFunctions.reservoirKeysBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("top_k_by_score"),
-      GraftFunctions.topKByScoreInfo,
-      GraftFunctions.topKByScoreBuilder))
+    GraftFunctions.table.foreach { case (name, info, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name), info, builder))
+    }
   }
 }
 
 object GraftFunctions {
 
-  // 3-arg constructor: the extended one validates usage/since/group
-  // formats and throws from a static initializer on empty fields
-  private[functions] val vecDotInfo =
-    new ExpressionInfo(classOf[FloatVectorDot].getName, null, "vec_dot")
+  type Builder = Seq[Expression] => Expression
 
-  private[functions] val vecDotBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.length == 2,
-        s"vec_dot expects 2 arguments, got ${children.length}")
-      FloatVectorDot(children.head, children(1))
-    }
+  /** `(name, info, builder)` for every graft SQL function: the one
+    * list [[GraftExtensions]] and [[register]] both read.
+    */
+  val table: Seq[(String, ExpressionInfo, Builder)] = Seq(
+    fn("vec_dot", classOf[FloatVectorDot], 2)(c => FloatVectorDot(c(0), c(1))),
+    fn("int_vec_dot", classOf[IntVectorDot], 2)(c => IntVectorDot(c(0), c(1))),
+    // bare AggregateFunctions, like Spark's own registry builders —
+    // the analyzer wraps them in an AggregateExpression
+    fn("sum_at_min", classOf[SumAtMin], 2)(c => SumAtMin(c(0), c(1))),
+    fn("kmin_values", classOf[KMinValues], 2)(c => KMinValues(c(0), c(1))),
+    fn("count_min", classOf[CountMin], 3)(c => CountMin(c(0), c(1), c(2))),
+    fn("hyper_log_log", classOf[HyperLogLog], 2)(c => HyperLogLog(c(0), c(1))),
+    // same SQL name as DuckDB's utf8proc-backed builtin — the oracle
+    // mirror is the IDENTICAL call text on both engines
+    fn("nfc_normalize", classOf[NfcNormalize], 1)(c => NfcNormalize(c(0))),
+    fn("reservoir_keys", classOf[ReservoirKeys], 3)(c => ReservoirKeys(c(0), c(1), c(2))),
+    fn("top_k_by_score", classOf[TopKByScore], 3)(c => TopKByScore(c(0), c(1), c(2))))
 
-  private[functions] val intVecDotInfo =
-    new ExpressionInfo(classOf[IntVectorDot].getName, null, "int_vec_dot")
-
-  private[functions] val intVecDotBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.length == 2,
-        s"int_vec_dot expects 2 arguments, got ${children.length}")
-      IntVectorDot(children.head, children(1))
-    }
-
-  private[functions] val sumAtMinInfo =
-    new ExpressionInfo(classOf[SumAtMin].getName, null, "sum_at_min")
-
-  private[functions] val sumAtMinBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.length == 2,
-        s"sum_at_min expects 2 arguments, got ${children.length}")
-      // bare AggregateFunction, like Spark's own registry builders —
-      // the analyzer wraps it in an AggregateExpression
-      SumAtMin(children.head, children(1))
-    }
-
-  private[functions] val kminValuesInfo =
-    new ExpressionInfo(classOf[KMinValues].getName, null, "kmin_values")
-
-  private[functions] val kminValuesBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.length == 2,
-        s"kmin_values expects 2 arguments, got ${children.length}")
-      KMinValues(children.head, children(1))
-    }
-
-  private[functions] val countMinInfo =
-    new ExpressionInfo(classOf[CountMin].getName, null, "count_min")
-
-  private[functions] val countMinBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.length == 3,
-        s"count_min expects 3 arguments, got ${children.length}")
-      CountMin(children.head, children(1), children(2))
-    }
-
-  private[functions] val hyperLogLogInfo =
-    new ExpressionInfo(classOf[HyperLogLog].getName, null, "hyper_log_log")
-
-  private[functions] val hyperLogLogBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.length == 2,
-        s"hyper_log_log expects 2 arguments, got ${children.length}")
-      HyperLogLog(children.head, children(1))
-    }
-
-  // same SQL name as DuckDB's utf8proc-backed builtin — the oracle
-  // mirror is the IDENTICAL call text on both engines
-  private[functions] val nfcNormalizeInfo =
-    new ExpressionInfo(classOf[NfcNormalize].getName, null, "nfc_normalize")
-
-  private[functions] val nfcNormalizeBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.length == 1,
-        s"nfc_normalize expects 1 argument, got ${children.length}")
-      NfcNormalize(children.head)
-    }
-
-  private[functions] val reservoirKeysInfo =
-    new ExpressionInfo(classOf[ReservoirKeys].getName, null, "reservoir_keys")
-
-  private[functions] val reservoirKeysBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.length == 3,
-        s"reservoir_keys expects 3 arguments, got ${children.length}")
-      ReservoirKeys(children.head, children(1), children(2))
-    }
-
-  private[functions] val topKByScoreInfo =
-    new ExpressionInfo(classOf[TopKByScore].getName, null, "top_k_by_score")
-
-  private[functions] val topKByScoreBuilder: Seq[Expression] => Expression =
-    children => {
-      require(children.length == 3,
-        s"top_k_by_score expects 3 arguments, got ${children.length}")
-      TopKByScore(children.head, children(1), children(2))
-    }
+  private def fn(name: String, cls: Class[_], arity: Int)(
+      build: Builder): (String, ExpressionInfo, Builder) =
+    // 3-arg constructor: the extended one validates usage/since/group
+    // formats and throws from a static initializer on empty fields
+    (name, new ExpressionInfo(cls.getName, null, name), children => {
+      require(children.length == arity, s"$name expects $arity argument" +
+        s"${if (arity == 1) "" else "s"}, got ${children.length}")
+      build(children)
+    })
 
   /** Register on an already-built session (no withExtensions hook). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "vec_dot", vecDotInfo, vecDotBuilder)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "int_vec_dot", intVecDotInfo, intVecDotBuilder)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "sum_at_min", sumAtMinInfo, sumAtMinBuilder)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "kmin_values", kminValuesInfo, kminValuesBuilder)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "count_min", countMinInfo, countMinBuilder)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "hyper_log_log", hyperLogLogInfo, hyperLogLogBuilder)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "nfc_normalize", nfcNormalizeInfo, nfcNormalizeBuilder)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "reservoir_keys", reservoirKeysInfo, reservoirKeysBuilder)
-    org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
-      spark, "top_k_by_score", topKByScoreInfo, topKByScoreBuilder)
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    table.foreach { case (name, info, builder) =>
+      org.apache.spark.sql.graftbridge.ColumnBridge.registerFunction(
+        spark, name, info, builder)
+    }
 }

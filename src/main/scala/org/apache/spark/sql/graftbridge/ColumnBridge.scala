@@ -17,7 +17,7 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Runtime SQL-function registration for sessions built WITHOUT
-    * `withExtensions` (the driver's Verify/Bench sessions): reach the
+    * `withExtensions` (the driver's session, via `SparkEntry.entry`): reach the
     * session's FunctionRegistry and register in place, with the full
     * ExpressionInfo (so DESCRIBE FUNCTION reports the native class).
     * Idempotent (registerFunction replaces). Non-classic sessions
@@ -36,4 +36,32 @@ object ColumnBridge {
           new org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
       case _ => ()
     }
+
+  /** Append the logical optimizer rules `extensions` injects to an
+    * already-built session, through `extraOptimizations` (the
+    * post-build injection point, run in the optimizer's last batch).
+    * A rule class the session already holds is skipped: a session
+    * built with the extension runs it in the operator-optimization
+    * batches, and a second copy would run it twice.
+    */
+  def addOptimizerRules(
+      spark: org.apache.spark.sql.SparkSession,
+      extensions: org.apache.spark.sql.SparkSessionExtensions => Unit): Unit =
+    spark match {
+      case classic: org.apache.spark.sql.classic.SparkSession =>
+        val ext = new org.apache.spark.sql.SparkSessionExtensions
+        extensions(ext)
+        val held = (classic.sessionState.optimizer.extendedOperatorOptimizationRules ++
+          classic.experimental.extraOptimizations).map(_.getClass).toSet
+        val missing = ext.buildOptimizerRules(classic).filterNot(r => held(r.getClass))
+        if (missing.nonEmpty)
+          classic.experimental.extraOptimizations ++= missing
+      case _ => ()
+    }
+
+  /** Block until every event posted so far has reached its listeners
+    * (query-execution callbacks are delivered asynchronously).
+    */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
