@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.gold.Marts
+import graft.operators.SessionCache
 import graft.schema.Schemas
 import graft.silver.{Dimensions, SilverTransform}
 import graft.sources.Bronze
@@ -137,38 +138,39 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     * (postgres_client.py:26-50).
     */
   def runSilver(date: LocalDate): Long = withWriterLock {
-    val normalized = SilverTransform.fromJson(
-      spark, bronze.objectPath(date).toString, java.sql.Date.valueOf(date))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Columnar mirror of the RAW per-day listing set (pre-dedup) — the
-    // G4 demand mart needs day-pair diffs over raw snapshots (§2.4),
-    // and re-parsing a month of JSON documents per gold run would not
-    // scale. Dynamic partition overwrite keeps re-runs idempotent
-    // (the day's partition is replaced, not appended).
-    normalized
-      .select(col("id"), col("item_id"),
-        col("quantity").cast("long").as("quantity"), col("snapshot_date"))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("snapshot_date").parquet(bronzeDailyPath)
-    // prune: only ids are needed from the existing side of the anti-join
-    val newRows = SilverTransform.firstSeenOnly(normalized, silver.select("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = newRows.count()
-    // sortWithinPartitions(partition col, created_at): each written
-    // file is created_at-ordered, so its parquet row groups carry
-    // TIGHT created_at min/max stats. That makes the G2 increment's
-    // created_at range scan ([[Pipeline.createdAtRangeFilter]]) a
-    // row-group skip STRUCTURALLY — even on a backfill where
-    // created_at stops correlating with snapshot_date/write time —
-    // instead of a statistics bet. (The writer keeps this order: its
-    // required ordering, the partition column, is a satisfied prefix.)
-    if (n > 0)
-      newRows.sortWithinPartitions(col("snapshot_date"), col("created_at"))
-        .write.mode(SaveMode.Append)
-        .partitionBy("snapshot_date").parquet(silverPath)
-    newRows.unpersist(); normalized.unpersist()
-    n
+    SessionCache.scoped(SilverTransform.fromJson(
+        spark, bronze.objectPath(date).toString,
+        java.sql.Date.valueOf(date))) { normalized =>
+      // Columnar mirror of the RAW per-day listing set (pre-dedup) — the
+      // G4 demand mart needs day-pair diffs over raw snapshots (§2.4),
+      // and re-parsing a month of JSON documents per gold run would not
+      // scale. Dynamic partition overwrite keeps re-runs idempotent
+      // (the day's partition is replaced, not appended).
+      normalized
+        .select(col("id"), col("item_id"),
+          col("quantity").cast("long").as("quantity"), col("snapshot_date"))
+        .write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("snapshot_date").parquet(bronzeDailyPath)
+      // prune: only ids are needed from the existing side of the anti-join
+      SessionCache.scoped(
+          SilverTransform.firstSeenOnly(normalized, silver.select("id"))) { newRows =>
+        val n = newRows.count()
+        // sortWithinPartitions(partition col, created_at): each written
+        // file is created_at-ordered, so its parquet row groups carry
+        // TIGHT created_at min/max stats. That makes the G2 increment's
+        // created_at range scan ([[Pipeline.createdAtRangeFilter]]) a
+        // row-group skip STRUCTURALLY — even on a backfill where
+        // created_at stops correlating with snapshot_date/write time —
+        // instead of a statistics bet. (The writer keeps this order: its
+        // required ordering, the partition column, is a satisfied prefix.)
+        if (n > 0)
+          newRows.sortWithinPartitions(col("snapshot_date"), col("created_at"))
+            .write.mode(SaveMode.Append)
+            .partitionBy("snapshot_date").parquet(silverPath)
+        n
+      }
+    }
   }
 
   /** E1 step 3 — incremental dim enrichment: R2-extended candidate ids
@@ -194,20 +196,18 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
       .collect().map(_.getLong(0)).toSeq // <=100 ids by contract — driver-safe
     if (ids.isEmpty) (0L, Nil)
     else {
-      val updates = Dimensions.enrich(spark, ids, source)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val attrs = Seq("name", "quality", "item_class", "item_subclass", "icon_url")
-      // <= `limit` rows by construction — driver-safe
-      val changed = updates.alias("u")
-        .join(dims.select((Seq("item_id") ++ attrs).map(col): _*).alias("o"),
-          Seq("item_id"), "left")
-        .where(attrs.map(a => !(col(s"u.$a") <=> col(s"o.$a"))).reduce(_ || _))
-        .select("item_id").collect().map(_.getLong(0)).toSeq
-      val merged = Dimensions.upsert(dims, updates)
-      overwriteAtomically(dimsPath, merged, Schemas.itemDim)
-      val n = updates.count()
-      updates.unpersist()
-      (n, changed)
+      SessionCache.scoped(Dimensions.enrich(spark, ids, source)) { updates =>
+        val attrs = Seq("name", "quality", "item_class", "item_subclass", "icon_url")
+        // <= `limit` rows by construction — driver-safe
+        val changed = updates.alias("u")
+          .join(dims.select((Seq("item_id") ++ attrs).map(col): _*).alias("o"),
+            Seq("item_id"), "left")
+          .where(attrs.map(a => !(col(s"u.$a") <=> col(s"o.$a"))).reduce(_ || _))
+          .select("item_id").collect().map(_.getLong(0)).toSeq
+        val merged = Dimensions.upsert(dims, updates)
+        overwriteAtomically(dimsPath, merged, Schemas.itemDim)
+        (updates.count(), changed)
+      }
     }
   }
 
@@ -228,12 +228,12 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
         .collect().map(_.getDate(0)).toSeq // <= retention-window dates
     if (affectedDates.nonEmpty) {
       val d = dims
-      val affected = silver.where(col("snapshot_date").isin(affectedDates: _*))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      overwriteDatePartitions("g1_daily_market_summary",
-        Marts.dailyMarketSummary(affected, d))
-      overwriteDatePartitions("g7_sector_trends", Marts.sectorTrends(affected, d))
-      affected.unpersist()
+      SessionCache.scoped(
+          silver.where(col("snapshot_date").isin(affectedDates: _*))) { affected =>
+        overwriteDatePartitions("g1_daily_market_summary",
+          Marts.dailyMarketSummary(affected, d))
+        overwriteDatePartitions("g7_sector_trends", Marts.sectorTrends(affected, d))
+      }
     }
   }
 
@@ -246,26 +246,26 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     * snapshot_hour; G4 stays unpartitioned — see runGoldIncremental).
     */
   def runGold(): Unit = withWriterLock {
-    val s = silver.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val d = dims
-    // G1 already carries the exact per-(item,date) median — reuse it
-    // for G3/G6 instead of paying a second median pass over silver
-    // (G1's groups include all-null-price item-days via its left
-    // join, matching what a standalone median would emit as null)
-    val g1 = Marts.dailyMarketSummary(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    writeDated("g1_daily_market_summary", g1)
-    val dailyMedian = g1.select(
-      col("item_id"), col("snapshot_date"), col("median_buyout"))
-    writeDated("g2_price_history",
-      Marts.priceHistory(s, ts = col("created_at"))
-        .withColumn("snapshot_date", to_date(col("snapshot_hour"))))
-    writeDated("g3_market_opportunities", Marts.marketOpportunities(dailyMedian))
-    write("g4_item_demand", Marts.itemDemand(bronzeDaily))
-    writeDated("g5_market_concentration", Marts.marketConcentration(s))
-    writeDated("g6_market_index", Marts.marketIndex(dailyMedian))
-    writeDated("g7_sector_trends", Marts.sectorTrends(s, d))
-    g1.unpersist(); s.unpersist()
+    SessionCache.scoped(silver) { s =>
+      val d = dims
+      // G1 already carries the exact per-(item,date) median — reuse it
+      // for G3/G6 instead of paying a second median pass over silver
+      // (G1's groups include all-null-price item-days via its left
+      // join, matching what a standalone median would emit as null)
+      SessionCache.scoped(Marts.dailyMarketSummary(s, d)) { g1 =>
+        writeDated("g1_daily_market_summary", g1)
+        val dailyMedian = g1.select(
+          col("item_id"), col("snapshot_date"), col("median_buyout"))
+        writeDated("g2_price_history",
+          Marts.priceHistory(s, ts = col("created_at"))
+            .withColumn("snapshot_date", to_date(col("snapshot_hour"))))
+        writeDated("g3_market_opportunities", Marts.marketOpportunities(dailyMedian))
+        write("g4_item_demand", Marts.itemDemand(bronzeDaily))
+        writeDated("g5_market_concentration", Marts.marketConcentration(s))
+        writeDated("g6_market_index", Marts.marketIndex(dailyMedian))
+        writeDated("g7_sector_trends", Marts.sectorTrends(s, d))
+      }
+    }
   }
 
   /** Incremental gold maintenance — the 100 TB daily path.
@@ -304,52 +304,52 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     */
   def runGoldIncremental(date: LocalDate): Unit = withWriterLock {
     val d = dims
-    val day = silver.where(col("snapshot_date") === lit(java.sql.Date.valueOf(date)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    overwriteDatePartitions("g1_daily_market_summary",
-      Marts.dailyMarketSummary(day, d))
-    overwriteDatePartitions("g5_market_concentration",
-      Marts.marketConcentration(day))
-    overwriteDatePartitions("g7_sector_trends", Marts.sectorTrends(day, d))
-    // G2: recompute the bar dates partition D touches, from all rows
-    // sharing those created_at dates
-    val affectedBarDates = day
-      .select(to_date(col("created_at")).as("d")).distinct()
-      .collect().map(_.getDate(0)) // <= backfill-days values; driver-safe
-    if (affectedBarDates.nonEmpty) {
-      val barRows = silver.where(
-        Pipeline.createdAtRangeFilter(affectedBarDates.toSeq))
-      overwriteDatePartitions("g2_price_history",
-        Marts.priceHistory(barRows, ts = col("created_at"))
-          .withColumn("snapshot_date", to_date(col("snapshot_hour"))))
+    SessionCache.scoped(
+        silver.where(col("snapshot_date") === lit(java.sql.Date.valueOf(date)))) { day =>
+      overwriteDatePartitions("g1_daily_market_summary",
+        Marts.dailyMarketSummary(day, d))
+      overwriteDatePartitions("g5_market_concentration",
+        Marts.marketConcentration(day))
+      overwriteDatePartitions("g7_sector_trends", Marts.sectorTrends(day, d))
+      // G2: recompute the bar dates partition D touches, from all rows
+      // sharing those created_at dates
+      val affectedBarDates = day
+        .select(to_date(col("created_at")).as("d")).distinct()
+        .collect().map(_.getDate(0)) // <= backfill-days values; driver-safe
+      if (affectedBarDates.nonEmpty) {
+        val barRows = silver.where(
+          Pipeline.createdAtRangeFilter(affectedBarDates.toSeq))
+        overwriteDatePartitions("g2_price_history",
+          Marts.priceHistory(barRows, ts = col("created_at"))
+            .withColumn("snapshot_date", to_date(col("snapshot_hour"))))
+      }
+      // G3/G6: trailing windows over G1's already-maintained medians,
+      // read partition-pruned from gold, output filtered to day D
+      val dayCol = lit(java.sql.Date.valueOf(date))
+      val g1Window = gold("g1_daily_market_summary")
+        .where(col("snapshot_date").between(date_sub(dayCol, 6), dayCol))
+        .select(col("item_id"), col("snapshot_date"), col("median_buyout"))
+      overwriteDatePartitions("g3_market_opportunities",
+        Marts.marketOpportunities(g1Window)
+          .where(col("snapshot_date") === dayCol))
+      // G6's lag must read the LATEST PRIOR G1 date actually present —
+      // a full recompute's lag() skips over gap days (a failed/skipped
+      // ingest), so hard-coding D-1 would diverge exactly then. The
+      // prior date comes from the partition listing (metadata-only) and
+      // may be older than the G3 window, so G6 reads its own pruned
+      // two-partition slice.
+      val prevG1Date = partitionDates(goldPath("g1_daily_market_summary"))
+        .filter(_.isBefore(date))
+        .reduceOption((a, b) => if (a.isAfter(b)) a else b)
+      val g6Dates = (Seq(date) ++ prevG1Date).map(java.sql.Date.valueOf)
+      val g6Input = gold("g1_daily_market_summary")
+        .where(col("snapshot_date").isin(g6Dates: _*))
+        .select(col("item_id"), col("snapshot_date"), col("median_buyout"))
+      overwriteDatePartitions("g6_market_index",
+        Marts.marketIndex(g6Input)
+          .where(col("snapshot_date") === dayCol))
+      write("g4_item_demand", Marts.itemDemand(bronzeDaily))
     }
-    // G3/G6: trailing windows over G1's already-maintained medians,
-    // read partition-pruned from gold, output filtered to day D
-    val dayCol = lit(java.sql.Date.valueOf(date))
-    val g1Window = gold("g1_daily_market_summary")
-      .where(col("snapshot_date").between(date_sub(dayCol, 6), dayCol))
-      .select(col("item_id"), col("snapshot_date"), col("median_buyout"))
-    overwriteDatePartitions("g3_market_opportunities",
-      Marts.marketOpportunities(g1Window)
-        .where(col("snapshot_date") === dayCol))
-    // G6's lag must read the LATEST PRIOR G1 date actually present —
-    // a full recompute's lag() skips over gap days (a failed/skipped
-    // ingest), so hard-coding D-1 would diverge exactly then. The
-    // prior date comes from the partition listing (metadata-only) and
-    // may be older than the G3 window, so G6 reads its own pruned
-    // two-partition slice.
-    val prevG1Date = partitionDates(goldPath("g1_daily_market_summary"))
-      .filter(_.isBefore(date))
-      .reduceOption((a, b) => if (a.isAfter(b)) a else b)
-    val g6Dates = (Seq(date) ++ prevG1Date).map(java.sql.Date.valueOf)
-    val g6Input = gold("g1_daily_market_summary")
-      .where(col("snapshot_date").isin(g6Dates: _*))
-      .select(col("item_id"), col("snapshot_date"), col("median_buyout"))
-    overwriteDatePartitions("g6_market_index",
-      Marts.marketIndex(g6Input)
-        .where(col("snapshot_date") === dayCol))
-    write("g4_item_demand", Marts.itemDemand(bronzeDaily))
-    day.unpersist()
   }
 
   private def writeDated(name: String, df: DataFrame): Unit =

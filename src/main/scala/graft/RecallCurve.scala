@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.SessionCache
+
 /** Measured ANN recall curves — the evidence behind the production
   * parameter defaults recorded in BASELINE.md (recall@10 vs nprobe
   * for IVF at a production-shaped nlist, and vs bits/probes for
@@ -63,14 +65,14 @@ object RecallCurve {
     // corpus: the driver tables (isotropic) by default; set
     // SPARK_GRAFT_RECALL_CORPUS=clustered:<n>:<dim>:<clusters> for the
     // clustered reference geometry at any scale
-    val emb = (sys.env.get("SPARK_GRAFT_RECALL_CORPUS") match {
+    val corpus = sys.env.get("SPARK_GRAFT_RECALL_CORPUS") match {
       case Some(s"clustered:$n:$d:$c") =>
         clusteredCorpus(spark, n.toLong, d.toInt, c.toInt)
       case _ => Tables.embeddings(spark, sfDir)
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val queries = emb.where(col("vec_id") % 311 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    SessionCache.scoped(corpus) { emb =>
+    SessionCache.scoped(emb.where(col("vec_id") % 311 === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))) { queries =>
     val nQ = queries.count()
 
     def meanRecall(approx: DataFrame, truth: DataFrame): Double = {
@@ -84,9 +86,8 @@ object RecallCurve {
     }
 
     val k = 10
-    val truth = Similarity.bruteSearchAll(emb, queries, k)
-      .select(col("query_id"), col("vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    SessionCache.scoped(Similarity.bruteSearchAll(emb, queries, k)
+      .select(col("query_id"), col("vec_id"))) { truth =>
     truth.count()
 
     // IVF: production-shaped nlist (~sqrt N, k-means-refined), sweep
@@ -137,19 +138,6 @@ object RecallCurve {
     val nHubs = sys.env.get("SPARK_GRAFT_NSW_HUBS").map(_.toInt)
       .getOrElse(math.max(16, math.sqrt(n.get.toDouble).toInt))
     lazy val hubs = Similarity.sampleCentroids(emb, nHubs, knownCount = n)
-    lazy val edges = {
-      val e = GraphAnn.buildEdges(emb, hubs, dim = Some(dim))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.count()
-      e
-    }
-    if (fam("nsw")) for (beam <- Seq(4, 8, 16); rounds <- Seq(2, 3)) {
-      val r = meanRecall(GraphAnn.searchAll(edges, hubs, queries, k,
-        beam = beam, rounds = rounds), truth)
-      println(s"""{"family":"nsw","hubs":$nHubs,"beam":$beam,"rounds":$rounds,"mean_recall":$r,"q":$nQ}""")
-      Console.out.flush()
-    }
-
     // Lifecycle recall at PRODUCTION DEFAULTS (round 17): the index a
     // deployment actually serves is write(base) + append(batches) —
     // since both now default to the corpus-density sub-bucketed
@@ -176,6 +164,16 @@ object RecallCurve {
       }
     }
 
+    if (nswNeeded)
+    SessionCache.scoped(GraphAnn.buildEdges(emb, hubs, dim = Some(dim))) { edges =>
+    edges.count()
+    if (fam("nsw")) for (beam <- Seq(4, 8, 16); rounds <- Seq(2, 3)) {
+      val r = meanRecall(GraphAnn.searchAll(edges, hubs, queries, k,
+        beam = beam, rounds = rounds), truth)
+      println(s"""{"family":"nsw","hubs":$nHubs,"beam":$beam,"rounds":$rounds,"mean_recall":$r,"q":$nQ}""")
+      Console.out.flush()
+    }
+
     // FILTERED graph search: beam x selectivity — the tuning evidence
     // behind p139's "raise beam with predicate selectivity" guidance.
     // The beam routes through every node but only 1/m of the corpus
@@ -186,10 +184,9 @@ object RecallCurve {
       // the filtered ground truth depends only on the selectivity —
       // hoist it out of the beam loop (one brute-force job per m)
       val allowed = emb.where(col("vec_id") % m === 0).select(col("vec_id"))
-      val ftruth = Similarity.bruteSearchAll(
+      SessionCache.scoped(Similarity.bruteSearchAll(
         emb.where(col("vec_id") % m === 0), queries, k)
-        .select(col("query_id"), col("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("query_id"), col("vec_id"))) { ftruth =>
       ftruth.count()
       if (fam("nsw_filtered")) for (beam <- Seq(8, 16, 32)) {
         val r = meanRecall(GraphAnn.searchAll(edges, hubs, queries, k,
@@ -216,9 +213,9 @@ object RecallCurve {
         println(s"""{"family":"nsw_filtered_acorn_auto","selectivity":"1/$m","beam":$beamChosen,"rounds":3,"mean_recall":$r,"q":$nQ}""")
         Console.out.flush()
       }
-      ftruth.unpersist()
+      }
     }
-    if (nswNeeded) edges.unpersist()
+    }
 
     // Quantized paths at production defaults — the honesty artifact
     // behind the compression knobs: how much recall each code budget
@@ -238,8 +235,7 @@ object RecallCurve {
     // resolution, floored by code-granularity ties on clustered
     // geometry) and truth@10-in-top50 — the shortlist coverage the
     // standard ADC-shortlist -> exact-rerank pipeline actually needs.
-    val nemb = Quantization.l2Normalize(emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    SessionCache.scoped(Quantization.l2Normalize(emb)) { nemb =>
     val nq2 = nemb.join(queries.select(col("query_id")),
         col("vec_id") === col("query_id"))
       .select(col("query_id"), col("embedding").as("query_vec"))
@@ -252,6 +248,10 @@ object RecallCurve {
           knownCount = n), truth)
       println(s"""{"family":"pq","m":$m,"ksub":16,"mean_recall":$rPq,"shortlist50_coverage":$rSl,"q":$nQ}""")
       Console.out.flush()
+    }
+    }
+    }
+    }
     }
     }
     spark.stop()

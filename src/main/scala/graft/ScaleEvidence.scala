@@ -60,22 +60,21 @@ object ScaleEvidence {
     // ids, so a plain modulus keeps the batch fraction stable),
     // unsplit vs the production default (corpus-density dual-refined,
     // target 8×m = 64).
-    val emb = graft.Tables.embeddings(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEmb = emb.count()
-    val embBatch = emb.where(col("vec_id") % 10 === 0)
-    val dimLen = emb.select(col("embedding")).head()
-      .getAs[scala.collection.Seq[Float]](0).length
-    for ((name, split) <- Seq(
-        ("nsw_append_mass_unsplit", None: Option[Long]),
-        ("nsw_append_mass_default",
-          Some(graft.pipeline.GraphAnn.AutoSplit)))) {
-      val mass = graft.pipeline.GraphAnn.appendCandidateMass(
-        embBatch, emb, dim = dimLen, splitBucket = split)
-      println(s"""{"query":"$name","sf_dir":"$sfDir","corpus":$nEmb,"batch":${embBatch.count()},"pairs":$mass}""")
-      Console.out.flush()
+    graft.operators.SessionCache.scoped(graft.Tables.embeddings(spark, sfDir)) { emb =>
+      val nEmb = emb.count()
+      val embBatch = emb.where(col("vec_id") % 10 === 0)
+      val dimLen = emb.select(col("embedding")).head()
+        .getAs[scala.collection.Seq[Float]](0).length
+      for ((name, split) <- Seq(
+          ("nsw_append_mass_unsplit", None: Option[Long]),
+          ("nsw_append_mass_default",
+            Some(graft.pipeline.GraphAnn.AutoSplit)))) {
+        val mass = graft.pipeline.GraphAnn.appendCandidateMass(
+          embBatch, emb, dim = dimLen, splitBucket = split)
+        println(s"""{"query":"$name","sf_dir":"$sfDir","corpus":$nEmb,"batch":${embBatch.count()},"pairs":$mass}""")
+        Console.out.flush()
+      }
     }
-    emb.unpersist()
     spark.stop()
   }
 }

@@ -116,33 +116,34 @@ object SkewBench {
         when(pmod(xxhash64($"event_id", lit("skew")), lit(2)) === 0, 0L)
           .otherwise(pmod(xxhash64($"event_id", lit("cold")), lit(63)) + 1))
       .select("event_id", "user_id", "value", "props")
-    val pre = ev.repartition($"user_id").persist()
-    val total = pre.count()
+    graft.operators.SessionCache.scoped(ev.repartition($"user_id")) { pre =>
+      val total = pre.count()
 
-    val aggs = Map(
-      "k_sum" -> (get_json_object($"props", "$.k").cast("long"), "sum"),
-      "n" -> (lit(1L), "count"),
-      "v_avg" -> ($"value", "avg"))
-    def aggPlain = pre.groupBy("user_id").agg(
-      sum(get_json_object($"props", "$.k").cast("long")).as("k_sum"),
-      count(lit(1L)).as("n"), avg($"value").as("v_avg"))
-    def aggSalted = graft.operators.Skew.saltedAgg(
-      pre, Seq("user_id"), saltBuckets = 64, aggs, spread = true)
+      val aggs = Map(
+        "k_sum" -> (get_json_object($"props", "$.k").cast("long"), "sum"),
+        "n" -> (lit(1L), "count"),
+        "v_avg" -> ($"value", "avg"))
+      def aggPlain = pre.groupBy("user_id").agg(
+        sum(get_json_object($"props", "$.k").cast("long")).as("k_sum"),
+        count(lit(1L)).as("n"), avg($"value").as("v_avg"))
+      def aggSalted = graft.operators.Skew.saltedAgg(
+        pre, Seq("user_id"), saltBuckets = 64, aggs, spread = true)
 
-    // equivalence (exact on long sum/count; avg compared to 1e-9 rel)
-    val p = aggPlain.collect().map(r => r.getLong(0) ->
-      (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
-    val s = aggSalted.collect().map(r => r.getAs[Long]("user_id") ->
-      (r.getAs[Long]("k_sum"), r.getAs[Long]("n"), r.getAs[Double]("v_avg"))).toMap
-    require(p.keySet == s.keySet && p.forall { case (k, (ks, n, va)) =>
-      s(k)._1 == ks && s(k)._2 == n &&
-        math.abs(s(k)._3 - va) <= math.abs(va) * 1e-9 },
-      "salted aggregation disagrees with plain")
-    report("agg_plain_preclustered",
-      (1 to passes).map(_ => timeIt(materialize(aggPlain))),
-      s""","rows":$total""")
-    report("agg_salted_spread",
-      (1 to passes).map(_ => timeIt(materialize(aggSalted))))
+      // equivalence (exact on long sum/count; avg compared to 1e-9 rel)
+      val p = aggPlain.collect().map(r => r.getLong(0) ->
+        (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+      val s = aggSalted.collect().map(r => r.getAs[Long]("user_id") ->
+        (r.getAs[Long]("k_sum"), r.getAs[Long]("n"), r.getAs[Double]("v_avg"))).toMap
+      require(p.keySet == s.keySet && p.forall { case (k, (ks, n, va)) =>
+        s(k)._1 == ks && s(k)._2 == n &&
+          math.abs(s(k)._3 - va) <= math.abs(va) * 1e-9 },
+        "salted aggregation disagrees with plain")
+      report("agg_plain_preclustered",
+        (1 to passes).map(_ => timeIt(materialize(aggPlain))),
+        s""","rows":$total""")
+      report("agg_salted_spread",
+        (1 to passes).map(_ => timeIt(materialize(aggSalted))))
+    }
 
     spark.stop()
   }

@@ -3,94 +3,82 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Registry for QUERY-LIFETIME persists (round-17 optimization).
+/** The one way `src/main` materializes a frame, in two forms.
   *
-  * Many operators persist a shared substrate (shingle frames, bucket
-  * projections, stage-boundary verdict sets) that several downstream
-  * branches of ONE lazy plan consume. The operator cannot unpersist it
-  * itself — the caller's action runs after the operator returns — so
-  * until round 17 those frames stayed in the cache manager for the
-  * REST of the session. Over a 267-query Bench/Verify run the leaked
-  * frames (some corpus-scale) accumulated into block-manager pressure
-  * that made late-running heavy queries 3-4x slower than their
-  * isolated cost (measured: p93_curation_e2e 45.8 s mid-bench vs
-  * 14.6 s isolated at the same rig calibration — the guide's §5
-  * "unpersist when done" applied at harness grain).
+  *  - [[cut]]: query-lifetime. A substrate that several downstream
+  *    branches of ONE lazy plan consume (shingle frames, bucket
+  *    projections, stage-boundary verdict sets, loop state). The
+  *    operator cannot unpersist it — the caller's action runs after
+  *    the operator returns — so the cut is registered, and a harness
+  *    calls [[release]] after the query's action. Before round 17
+  *    such frames stayed cached for the rest of the session; over a
+  *    267-query Bench run they made late heavy queries 3-4x slower
+  *    than their isolated cost (p93_curation_e2e 45.8 s mid-bench vs
+  *    14.6 s isolated).
+  *  - [[scoped]]: a plain persist around a body that runs every
+  *    consuming action itself, unpersisted in a `finally`.
   *
-  * Contract: [[pin]] persists exactly like the call it replaces and
-  * registers the frame; a harness calls [[release]] AFTER the query's
-  * action completes (noop write / parquet dump), dropping every
-  * registered frame in one sweep. Sessions that never call release
-  * behave exactly as before (pin == persist). The intentional
+  * Blocks of either form recompute from lineage when released or
+  * lost, so a frame reused after [[release]] still answers. The
   * session-scoped mart cache ([[graft.queries.TestdataAdapter]]) does
-  * NOT go through this registry — marts are the engine's analog of
-  * the reference's precomputed gold tables and must survive across
-  * serving queries.
+  * NOT go through here — marts are the analog of the reference's
+  * precomputed gold tables and must survive across serving queries.
   */
 object SessionCache {
 
-  private val pinned =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private val pinnedRdds =
+  private val held =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
 
-  /** Persist `df` at `level` and register it for the next [[release]].
-    * Returns `df` (persist mutates the frame's cache state in place).
-    */
-  def pin(df: DataFrame,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    df.persist(level)
-    pinned.add(df)
-    df
-  }
-
-  /** [[pin]] with a LINEAGE CUT (round-18, guide §3.3/§7.3): returns a
-    * lazy `localCheckpoint` of `df` — same rows, frozen at first
-    * materialization — whose downstream plans are a LogicalRDD leaf
-    * instead of `df`'s whole logical tree. For substrates consumed by
-    * MANY downstream stages of one composed query, a plain persist
-    * still makes AQE re-analyze the full upstream tree between every
-    * query stage (profiled on p93: 9.0 s of inter-job driver gaps in a
-    * 17 s query — over half the wall was plan re-analysis). The
-    * checkpoint's storage blocks are registered for [[release]] like a
-    * pin's: localCheckpoint persists its RDD at mark time, so the
-    * getPersistentRDDs delta around the call captures exactly the new
-    * block set (harnesses are sequential; a concurrent pinCut could
-    * only over-capture a sibling's blocks, which release would then
-    * free early — never a correctness issue, persisted RDDs recompute).
+  /** `df`'s rows persisted (MEMORY_AND_DISK) under a `LogicalRDD` leaf
+    * — the plan-level lineage cut of `Dataset.localCheckpoint`, which
+    * keeps downstream planning flat: a plain persist leaves the whole
+    * upstream tree in every consumer's plan, and AQE re-optimizes it
+    * between query stages (p93: 9.0 s of inter-job driver gaps in a
+    * 17 s query). Unlike a checkpoint, the RDD keeps its lineage, so
+    * a block dropped by [[release]] or lost with an executor is
+    * recomputed instead of failing the query. The RDD is registered
+    * for [[release]]. The kept lineage costs driver and task time in
+    * loops that cut a union of earlier cuts each round: a task
+    * carries the narrow lineage of every earlier round (GraphAnn's
+    * ACORN search ships task binaries up to 10.9 MiB where a
+    * truncating checkpoint shipped 5.9 MiB).
     *
-    * NOT a drop-in for every pin: a frame whose consumers benefit from
-    * cached-batch filter pushdown, or one consumed exactly once, keeps
-    * the plain [[pin]].
+    * When the upstream runs: building the cut calls `toRdd`, and for
+    * an adaptive plan that runs the upstream shuffle stages here, at
+    * the call — which is why a "plan" span around a cut holds jobs.
+    * The rows after the last exchange are computed and stored by the
+    * first action that reads them (`eager = false`) or by one job in
+    * this call that stores every partition (`eager = true`).
     */
-  def pinCut(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val cp = df.localCheckpoint(eager = false)
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before.contains(id)) pinnedRdds.add(rdd)
-    }
-    cp
+  def cut(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val (leaf, rdd) =
+      org.apache.spark.sql.graftbridge.CutBridge.persistedLeaf(df, eager)
+    held.add(rdd)
+    leaf
   }
 
-  /** Unpersist every frame pinned since the last release (non-blocking
-    * — block removal proceeds async). Returns the number released.
-    * Safe to call with actions in flight ONLY for frames whose plans
-    * are no longer needed; harnesses call it between queries.
+  /** `body` over `df` persisted at MEMORY_AND_DISK, unpersisted
+    * (non-blocking) when `body` returns or throws. For frames whose
+    * consumers all run inside `body`; the plans are a plain cached
+    * relation, not a cut.
+    */
+  def scoped[T](df: DataFrame)(body: DataFrame => T): T = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(p) finally { p.unpersist(blocking = false); () }
+  }
+
+  /** Unpersist every [[cut]] made since the last release
+    * (non-blocking — block removal proceeds async). Returns the
+    * number released. A released cut stays usable: its next read
+    * recomputes. Harnesses call it between queries.
     */
   def release(): Int = {
     var n = 0
-    var df = pinned.poll()
-    while (df != null) {
-      try { df.unpersist(false); () } catch { case _: Throwable => () }
-      n += 1
-      df = pinned.poll()
-    }
-    var rdd = pinnedRdds.poll()
+    var rdd = held.poll()
     while (rdd != null) {
-      try { rdd.unpersist(false); () } catch { case _: Throwable => () }
+      rdd.unpersist(blocking = false)
       n += 1
-      rdd = pinnedRdds.poll()
+      rdd = held.poll()
     }
     n
   }

@@ -85,12 +85,9 @@ object Classifier {
     }
 
   /** Shared trainer: runs the GD loop, then hands (model, xfeats) to
-    * `finish` BEFORE releasing the feature cache — so a scoring tail
-    * can build its (lazy) plan on the still-pinned frame. The frame's
-    * cache registration moves to [[graft.operators.SessionCache]] when
-    * `finish` returns a plan that will consume it after this method
-    * returns (the trainAndScore path); the plain-train path unpersists
-    * eagerly as before.
+    * `finish`. The feature frame is a [[graft.operators.SessionCache]]
+    * cut, held until the harness releases it, so a scoring tail can
+    * build its (lazy) plan on it.
     */
   private def trainLogRegOn[T](docs: DataFrame,
       label: org.apache.spark.sql.Column, buckets: Int, iterations: Int,
@@ -100,10 +97,10 @@ object Classifier {
     val spark = docs.sparkSession
     import spark.implicits._
 
-    // lineage-cutting pins (round-18): the GD loop runs ~3 actions per
+    // cuts (round-18): the GD loop runs ~3 actions per
     // iteration, and each re-analyzes every plan that embeds these
     // frames — the LogicalRDD leaf keeps per-action planning flat
-    val labeled = graft.operators.SessionCache.pinCut(
+    val labeled = graft.operators.SessionCache.cut(
       docs.select(col(idCol).as("doc_id"),
         label.cast("double").as("__y")))
     val n = labeled.count() // exact — the gradient divisor
@@ -115,7 +112,7 @@ object Classifier {
       docs.select(col(idCol).as("doc_id"), col(textCol)), buckets,
       "doc_id", textCol)
     val nf = counts.groupBy("doc_id").agg(sum(col("c")).as("__nf"))
-    val xfeats = graft.operators.SessionCache.pinCut(
+    val xfeats = graft.operators.SessionCache.cut(
       counts.join(nf, Seq("doc_id"))
         .select(col("doc_id"), col("bucket"),
           (col("c").cast("double") / col("__nf")).as("x")))
@@ -129,20 +126,20 @@ object Classifier {
           .toDF("bucket", "__w"))
       val dots = xfeats.join(wTable, Seq("bucket"))
         .groupBy("doc_id").agg(sum(col("x") * col("__w")).as("__dot"))
-      val errs = labeled.join(dots, Seq("doc_id"), "left")
+      val errFrame = labeled.join(dots, Seq("doc_id"), "left")
         .select(col("doc_id"),
           (lit(1.0) / (lit(1.0) +
             exp(-(coalesce(col("__dot"), lit(0.0)) + b))) - col("__y"))
             .as("__err"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // gradients: double sums ROUNDED THROUGH FLOAT (the oracle
       // contract), then one exact double division by n
-      val gradB = errs.agg(sum(col("__err")).cast("float")).head().getFloat(0)
-      val gradW = errs.join(xfeats, Seq("doc_id"))
-        .groupBy("bucket")
-        .agg(sum(col("__err") * col("x")).cast("float").as("g"))
-        .collect().map(r => r.getLong(0).toInt -> r.getFloat(1)).toMap
-      errs.unpersist()
+      val (gradB, gradW) = graft.operators.SessionCache.scoped(errFrame) { errs =>
+        (errs.agg(sum(col("__err")).cast("float")).head().getFloat(0),
+          errs.join(xfeats, Seq("doc_id"))
+            .groupBy("bucket")
+            .agg(sum(col("__err") * col("x")).cast("float").as("g"))
+            .collect().map(r => r.getLong(0).toInt -> r.getFloat(1)).toMap)
+      }
       val w2 = w.clone()
       gradW.foreach { case (bk, g) =>
         w2(bk) = w2(bk) - learningRate * g.toDouble / n
@@ -152,7 +149,7 @@ object Classifier {
       it += 1
     }
     val model = LogRegModel(w, b, buckets, learningRate, iterations)
-    // labeled/xfeats are pinCut-registered: the harness releases their
+    // labeled/xfeats are cuts: the harness releases their
     // blocks after the consuming action — which keeps the scoring
     // tail's lazy plan over xfeats valid until then (the round-17
     // handoff, now uniform for both finish paths)

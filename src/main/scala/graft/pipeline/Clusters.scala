@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Duplicate-cluster formation: connected components over a verified
   * near-dup pair list, so "keep one document per duplicate CLUSTER"
@@ -30,13 +29,12 @@ import org.apache.spark.storage.StorageLevel
   * (LSH components are near-cliques), so propagation alone converges
   * in 2-3 rounds; the shortcut step bounds the adversarial
   * long-path case at log2(diameter) extra rounds. Each round's label
-  * frame is eagerly localCheckpoint'ed: labels appear FOUR times in
-  * the next round's plan (twice in the propagation step, twice in
-  * the shortcut self-join), so without lineage truncation the
-  * logical plan grows 4^iter and analysis time — not the data —
-  * becomes the bottleneck by round ~6. A cluster deployment with
-  * executor loss in scope would swap this for reliable
-  * `checkpoint()` against a checkpoint dir (same call shape).
+  * frame is cut ([[graft.operators.SessionCache.cut]]): labels appear
+  * FOUR times in the next round's plan (twice in the propagation
+  * step, twice in the shortcut self-join), so without the cut's
+  * `LogicalRDD` leaf the logical plan grows 4^iter and analysis time
+  * — not the data — becomes the bottleneck by round ~6. The cut
+  * keeps its RDD lineage, so blocks lost with an executor recompute.
   */
 object Clusters {
 
@@ -54,19 +52,19 @@ object Clusters {
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b", maxIter: Int = 30): DataFrame = {
     val spark = pairs.sparkSession
-    // lineage-cutting pin, not a plain persist (round-18): `edges`
-    // embeds the caller's whole pair-construction tree (for near-dup
-    // callers, the full MinHash/LSH/verify plan), and EVERY round's
-    // convergence-probe action would re-analyze it — the LogicalRDD
-    // leaf keeps per-round planning flat. Blocks are harness-released
-    // like every other substrate pin (SessionCache.release).
-    val edges = graft.operators.SessionCache.pinCut(
+    // a cut, not a plain persist (round-18): `edges` embeds the
+    // caller's whole pair-construction tree (for near-dup callers, the
+    // full MinHash/LSH/verify plan), and EVERY round's convergence-
+    // probe action would re-analyze it — the LogicalRDD leaf keeps
+    // per-round planning flat. Blocks are harness-released like every
+    // other cut (SessionCache.release).
+    val edges = graft.operators.SessionCache.cut(
       pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
         .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
         .distinct())
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint() // eager: materializes AND truncates lineage
+    var labels = graft.operators.SessionCache.cut(
+      edges.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl")), eager = true)
     // Convergence via the label-sum invariant: both loop steps take a
     // pointwise `least`, so labels are monotone non-increasing and the
     // clustering changed this round IFF Σ lbl decreased. That turns
@@ -99,16 +97,15 @@ object Clusters {
       // (2) pointer shortcut: lbl := lbl(lbl). Every label IS a node
       // (labels only ever hold node ids), so the lookup always hits;
       // left join + coalesce keeps that a safety, not an assumption.
-      // LAZY localCheckpoint, not persist: labels feed the next
-      // round's plan in four places, so an un-truncated plan grows
-      // 4^iter (see the scaladoc). Lazy so the convergence probe
-      // below is the action that materializes it — one action per
-      // round, not a checkpoint action plus a probe action.
-      val next = stepped
+      // LAZY cut, not persist: labels feed the next round's plan in
+      // four places, so an uncut plan grows 4^iter (see the
+      // scaladoc). Lazy so the convergence probe below is the action
+      // that materializes it — one action per round, not a cut action
+      // plus a probe action.
+      val next = graft.operators.SessionCache.cut(stepped
         .join(stepped.select(col("node").as("lbl"), col("lbl").as("lbl2")),
           Seq("lbl"), "left")
-        .select(col("node"), least(col("lbl"), coalesce(col("lbl2"), col("lbl"))).as("lbl"))
-        .localCheckpoint(eager = false)
+        .select(col("node"), least(col("lbl"), coalesce(col("lbl2"), col("lbl"))).as("lbl")))
       val nextSum = labelSum(next)
       labels = next
       converged = nextSum.compareTo(prevSum) == 0

@@ -27,7 +27,7 @@ object Contamination {
     */
   def overlap(corpus: DataFrame, benchmark: DataFrame, n: Int = 5,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val corpusSh = graft.operators.SessionCache.pinCut(
+    val corpusSh = graft.operators.SessionCache.cut(
       Dedup.wordShingles(corpus, n, textCol, idCol))
     val benchSh = Dedup.wordShingles(benchmark, n, textCol, idCol)
       .select("shingle").distinct()
@@ -61,7 +61,7 @@ object Contamination {
     require(benchmarks.nonEmpty, "multiOverlap needs at least one benchmark")
     require(benchmarks.map(_._1).distinct.size == benchmarks.size,
       "benchmark ids must be distinct")
-    val corpusSh = graft.operators.SessionCache.pinCut(
+    val corpusSh = graft.operators.SessionCache.cut(
       Dedup.wordShingles(corpus, n, textCol, idCol))
     val benchSh = benchmarks.map { case (bid, df) =>
       Dedup.wordShingles(df, n, textCol, idCol)
@@ -113,7 +113,7 @@ object Contamination {
   def fingerprintOverlap(corpus: DataFrame, benchmark: DataFrame,
       window: Int = 8, band: Int = 4, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
-    val corpusFp = graft.operators.SessionCache.pinCut(TextAnalysis
+    val corpusFp = graft.operators.SessionCache.cut(TextAnalysis
       .winnowedFingerprints(corpus, window, band, textCol, idCol))
     val benchFp = TextAnalysis
       .winnowedFingerprints(benchmark, window, band, textCol, idCol)
@@ -150,7 +150,7 @@ object Contamination {
     */
   def exciseOverlaps(corpus: DataFrame, benchmark: DataFrame, n: Int = 5,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val toks = graft.operators.SessionCache.pinCut(
+    val toks = graft.operators.SessionCache.cut(
       corpus.select(col(idCol).as("doc_id"),
         posexplode(TextAnalysis.tokens(col(textCol))).as(Seq("pos", "tok"))))
     val benchSh = Dedup.wordShingles(benchmark, n, textCol, idCol)

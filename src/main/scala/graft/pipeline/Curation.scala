@@ -57,45 +57,24 @@ object Curation {
         * wall at sf0.1). Off only for plan inspection (PlanSpec needs
         * the full uncached tree to assert on every exchange).
         */
-      cache: Boolean = true,
-      /** The MATERIALIZE half of cache-or-materialize: when set, each
-        * multiply-consumed stage frame is written to
-        * `<persistPath>/<stage>` and read back instead of persisted —
-        * nothing is pinned in the session cache manager, and the
-        * boundary survives job/executor churn. This is the setting a
-        * long-lived multi-tenant session (or an actual 100 TB run)
-        * should use; takes precedence over `cache`.
-        */
-      persistPath: Option[String] = None)
+      cache: Boolean = true)
 
-  /** MEMORY_AND_DISK like every other pipeline cache: id/feature
-    * partitions that outgrow executor memory spill to local disk
-    * rather than evicting. Cache LIFETIME is session-scoped (the
-    * [[Dedup.minHashNearDups]] convention — the frames are internal
-    * to the lazy plan, so there is no post-action unpersist hook): a
-    * long-lived session running many corpora through [[curate]]
-    * should pass `persistPath` (materialized boundary, nothing left
-    * in the cache manager) or clear between runs with
-    * `spark.sharedState.cacheManager.clearCache()`.
+  /** A multiply-consumed stage frame, cut
+    * ([[graft.operators.SessionCache.cut]], lazy) when `cfg.cache`.
+    * A plain persist caches the rows, but every downstream plan still
+    * carries the whole upstream logical tree, and AQE re-optimizes
+    * that tree between every query stage — profiled at sf0.1: 67 jobs
+    * with 9.0 s of inter-job driver gaps, over half the query's wall;
+    * the cut took the gate from ~18 s to ~7.8 s at a flat control.
+    * Each downstream plan reads a `LogicalRDD` leaf instead. The
+    * adaptive upstream runs when the cut is built; the first
+    * consumer's action stores its rows (same rows either way — a
+    * materialization boundary cannot move any md5-variate verdict).
+    * Blocks live until the harness calls `SessionCache.release()`,
+    * and recompute if read after it.
     */
-  private def stageBoundary(df: DataFrame, cfg: Config,
-      stage: String): DataFrame = cfg.persistPath match {
-    case Some(root) => graft.operators.Materialize.boundary(df, s"$root/$stage")
-    case None if cfg.cache =>
-      // LAZY lineage-cutting pin, not a plain persist (round-18, guide
-      // §3.3/§7.3): a persist caches the rows but every downstream
-      // plan still CARRIES the whole upstream logical tree, and AQE
-      // re-optimizes that tree between every query stage — profiled
-      // at sf0.1: 67 jobs with 9.0 s of inter-job DRIVER gaps (plan
-      // re-analysis), over half the query's wall; the cut took the
-      // gate from ~18 s to ~7.8 s at a flat control. The checkpoint
-      // reduces each downstream stage plan to a LogicalRDD leaf; the
-      // first consumer's action materializes it (same rows, frozen —
-      // a materialization boundary cannot move any md5-variate
-      // verdict). Blocks stay harness-released via SessionCache.
-      graft.operators.SessionCache.pinCut(df)
-    case None => df
-  }
+  private def stageBoundary(df: DataFrame, cfg: Config): DataFrame =
+    if (cfg.cache) graft.operators.SessionCache.cut(df) else df
 
   /** The curated, resampled corpus: `(doc_id, text, source)` rows
     * that survive quality → canonical dedup → near-dedup →
@@ -115,16 +94,13 @@ object Curation {
     // hash-repartitioning the CORPUS (observed: an
     // ENSURE_REQUIREMENTS exchange carrying text), which is exactly
     // the shuffle this composition exists to avoid at 100 TB.
-    // Cached (cfg.cache): five substrate branches read it, and an
+    // Cut (cfg.cache): five substrate branches read it, and an
     // uncached plan re-scans the source and re-compiles the large
     // quality-predicate codegen unit per branch per action (measured
-    // ~4x the whole pipeline's wall at sf0.1). At 100 TB the same
-    // boundary is a one-time write of the filtered corpus to storage,
-    // read back by each substrate — cache-or-materialize, never
-    // recompute-per-branch.
+    // ~4x the whole pipeline's wall at sf0.1).
     val kept = stageBoundary(TextAnalysis.qualityFeatures(docs)
       .where(col("quality_score") >= cfg.minQuality)
-      .select(col("doc_id"), col("text"), col("source")), cfg, "kept")
+      .select(col("doc_id"), col("text"), col("source")), cfg)
 
     // 2. canonical exact dedup: the dedup KEY is the fingerprint of
     // NFC-normalized, control-stripped, case/whitespace-folded text
@@ -134,7 +110,7 @@ object Curation {
     val fps = kept.select(col("doc_id"),
       TextAnalysis.fingerprint(TextAnalysis.cleanText(col("text"))).as("__fp"))
     val canonIds = stageBoundary(fps.groupBy(col("__fp"))
-      .agg(min(col("doc_id")).as("doc_id")).select("doc_id"), cfg, "canon_ids")
+      .agg(min(col("doc_id")).as("doc_id")).select("doc_id"), cfg)
 
     // 3. near-dedup: banded MinHash candidates verified by exact
     // Jaccard (p06-p08 chain) over the canonical survivors' shingle
@@ -145,16 +121,11 @@ object Curation {
     // doc_a < doc_b — the smallest member of every cluster survives).
     val canonShingles = Dedup.wordShingles(kept, cfg.shingleN)
       .join(canonIds, Seq("doc_id"), "left_semi")
-    // persistPath mode opts out of the dedup-internal shingle persist
-    // too (nothing pinned after the run): the substrate re-derives
-    // from the materialized `kept` boundary — a narrow parquet
-    // re-read + explode, not a recompute of the upstream chain.
     val losers = Dedup.minHashNearDupsFromShingles(canonShingles,
-      cfg.nearDupThreshold,
-      persistShingles = cfg.persistPath.isEmpty)
+      cfg.nearDupThreshold)
       .select(col("doc_b").as("doc_id")).distinct()
     val nearIds = stageBoundary(
-      canonIds.join(losers, Seq("doc_id"), "left_anti"), cfg, "near_ids")
+      canonIds.join(losers, Seq("doc_id"), "left_anti"), cfg)
 
     // 4. decontamination: drop any doc sharing >= 1 word n-gram with
     // the benchmark ([[Contamination.decontaminate]]'s minOverlap = 1
@@ -168,7 +139,7 @@ object Curation {
     val contaminated = liveSh.join(broadcast(benchSh), Seq("shingle"))
       .select("doc_id").distinct()
     val decIds = stageBoundary(
-      nearIds.join(contaminated, Seq("doc_id"), "left_anti"), cfg, "dec_ids")
+      nearIds.join(contaminated, Seq("doc_id"), "left_anti"), cfg)
 
     // 5. DSIR: hashed-feature counts once off the scan, restricted to
     // the live ids at the (id, bucket) grain; importance weights
@@ -177,7 +148,7 @@ object Curation {
     // global sort, no text).
     val liveFeats = stageBoundary(
       Dsir.hashedFeatureCounts(kept, cfg.dsirBuckets)
-        .join(decIds, Seq("doc_id"), "left_semi"), cfg, "live_feats")
+        .join(decIds, Seq("doc_id"), "left_semi"), cfg)
     val targetIds = kept.select(col("doc_id"), col("source"))
       .where(col("source") === cfg.dsirTargetSource).select("doc_id")
       .join(decIds, Seq("doc_id"), "left_semi")

@@ -123,11 +123,10 @@ object Dedup {
     * pair-join, one pair-grain aggregation; only the final ratio
     * differs between the metrics.
     *
-    * `persistShingles=false` opts out of the internal MEMORY_AND_DISK
-    * persist for callers that manage caching themselves (the cache
-    * otherwise lives until session end — fine for one-shot jobs,
-    * unwanted in long-lived services; blocks evict LRU under pressure
-    * either way).
+    * `persistShingles=false` opts out of the internal cut
+    * ([[graft.operators.SessionCache.cut]]) for callers that manage
+    * caching themselves (its blocks otherwise live until the next
+    * `SessionCache.release()`).
     */
   private def overlapPairs(shingledIn: DataFrame, threshold: Double,
       maxShingleDf: Int, persistShingles: Boolean, metric: String)(
@@ -137,7 +136,7 @@ object Dedup {
     // upstream recomputes per consumer (measured 2-3x slower).
     val shingled =
       if (persistShingles)
-        graft.operators.SessionCache.pinCut(shingledIn)
+        graft.operators.SessionCache.cut(shingledIn)
       else shingledIn
     // shingle sizes per doc (uncapped — the cap only limits which
     // shingles can PAIR docs, not the true set sizes)
@@ -207,7 +206,7 @@ object Dedup {
     */
   def weightedCosinePairs(df: DataFrame, maxTermDf: Int = 100,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tf = graft.operators.SessionCache.pinCut(df
+    val tf = graft.operators.SessionCache.cut(df
       .select(col(idCol).as("doc_id"),
         explode(TextAnalysis.tokens(col(textCol))).as("term"))
       .groupBy(col("doc_id"), col("term"))
@@ -425,10 +424,10 @@ object Dedup {
     * verified with exact Jaccard (so the output is a true near-dup
     * set, LSH only prunes the pair space).
     */
-  /** `persistShingles=false` opts out of the internal cache like
-    * [[overlapPairs]]' flag — for long-lived sessions that manage
-    * caching themselves (the blocks otherwise live until session
-    * end).
+  /** `persistShingles=false` opts out of the internal cut like
+    * [[overlapPairs]]' flag — for callers that manage caching
+    * themselves (the blocks otherwise live until the next
+    * `SessionCache.release()`).
     */
   def minHashNearDups(df: DataFrame, threshold: Double, n: Int = 3,
       numHashes: Int = 16, rowsPerBand: Int = 4,
@@ -452,7 +451,7 @@ object Dedup {
     // bucketed table instead and each pass would read it back).
     val shingled =
       if (persistShingles)
-        graft.operators.SessionCache.pinCut(shingledIn)
+        graft.operators.SessionCache.cut(shingledIn)
       else shingledIn
     val candidates = lshCandidatePairs(
       minHashSignatures(shingled, numHashes), numHashes, rowsPerBand)
@@ -677,12 +676,11 @@ object Dedup {
 
   private def writeIndexBatch(docs: DataFrame, path: String, n: Int,
       numHashes: Int, rowsPerBand: Int, batchId: String): Unit = {
-    val shingled = wordShingles(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bandBuckets(minHashSignatures(shingled, numHashes), numHashes, rowsPerBand)
-      .write.mode("overwrite").parquet(s"$path/bands/batch=$batchId")
-    shingled.write.mode("overwrite").parquet(s"$path/shingles/batch=$batchId")
-    shingled.unpersist()
+    graft.operators.SessionCache.scoped(wordShingles(docs, n)) { shingled =>
+      bandBuckets(minHashSignatures(shingled, numHashes), numHashes, rowsPerBand)
+        .write.mode("overwrite").parquet(s"$path/bands/batch=$batchId")
+      shingled.write.mode("overwrite").parquet(s"$path/shingles/batch=$batchId")
+    }
   }
 
   /** Near-dup pairs (doc_new, doc_old, jaccard) of a NEW batch
@@ -704,7 +702,7 @@ object Dedup {
     val newShingledRaw = wordShingles(newDocs, n)
     val newShingled =
       if (persistShingles)
-        graft.operators.SessionCache.pinCut(newShingledRaw)
+        graft.operators.SessionCache.cut(newShingledRaw)
       else newShingledRaw
     val newBands = bandBuckets(
       minHashSignatures(newShingled, numHashes), numHashes, rowsPerBand)

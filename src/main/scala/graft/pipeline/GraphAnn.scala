@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.SessionCache
+
 /** Graph-index ANN — the navigable-small-world family (the HNSW
   * shape), closing the one ANN family the engine lacked next to
   * brute / sign-LSH / IVF / PQ (round-13 verdict ask #6 / #8 in
@@ -107,10 +109,10 @@ object GraphAnn {
     * is, and the two sides must agree on e per coarse bucket or
     * their refined ids never meet). Both frames are (__id, __v);
     * output (__id, __v, __b) with one or two refined ids per node,
-    * localCheckpoint'd — the refined frame is consumed several times
-    * downstream (maxBucket guard + pair sides) and its plan embeds a
-    * join + aggregate; re-running it per consumer measurably tripled
-    * the split build's cost.
+    * eagerly cut ([[SessionCache.cut]]) — the refined frame is
+    * consumed several times downstream (maxBucket guard + pair sides)
+    * and its plan embeds a join + aggregate; re-running it per
+    * consumer measurably tripled the split build's cost.
     */
   private def refineBucketed(base: DataFrame, countSource: DataFrame,
       target: Long, bits: Int, maxExtraBits: Int, d: Int): DataFrame = {
@@ -143,7 +145,7 @@ object GraphAnn {
           // would just duplicate every pair
           .otherwise(array(col("__b0"))))
           .as("__b"))
-      .localCheckpoint(true)
+      .transform(SessionCache.cut(_, eager = true))
   }
 
   /** The edge table: (src, dst, dst_vec, cosine, kind) with
@@ -327,13 +329,13 @@ object GraphAnn {
     // confirmation rides the FIRST expansion join (every entry node
     // is in the round-1 frontier, so a live hub necessarily surfaces
     // there as a src) — never a corpus-scale `edges.src.distinct()`.
-    var visited = entry.localCheckpoint(true)
+    var visited = SessionCache.cut(entry, eager = true)
     var ranked: DataFrame = null
     var frontier = visited
     for (r <- 0 until rounds) {
       // the frontier is |queries| x beam rows by construction — pin it
       // as the BROADCAST side so the edge table streams in place
-      // (a checkpointed frontier has no stats, and a planner-chosen
+      // (a cut frontier has no stats, and a planner-chosen
       // sort-merge join would shuffle the whole edge table per round)
       val joined = broadcast(frontier)
         .join(edges.select(col("src"), col("dst"), col("dst_vec")),
@@ -342,7 +344,7 @@ object GraphAnn {
         val liveSrc = joined.select(col("src")).distinct()
         ranked = entry.join(broadcast(liveSrc),
           col("__node") === col("src"), "left_semi")
-          .localCheckpoint(true)
+          .transform(SessionCache.cut(_, eager = true))
       }
       val expanded = joined
         .select(col("__qid"), col("__qv"), col("dst").as("__node"),
@@ -353,12 +355,12 @@ object GraphAnn {
       val fresh = expanded
         .join(visited.select(col("__qid"), col("__node")),
           Seq("__qid", "__node"), "left_anti")
-        .localCheckpoint(true)
-      // visited/ranked are UNIONS of already-checkpointed rounds —
-      // re-checkpointing the union each round just re-materializes
+        .transform(SessionCache.cut(_, eager = true))
+      // visited/ranked are UNIONS of already-cut rounds —
+      // re-cutting the union each round just re-materializes
       // the same blocks (measured: 3 of the 9 eager materializations
       // per search were these re-pins); a depth-≤rounds union of
-      // checkpointed legs scans cheaply and recomputes nothing
+      // cut legs scans cheaply and recomputes nothing
       visited = visited.unionByName(fresh)
       ranked = ranked.unionByName(fresh)
       frontier = fresh
@@ -509,11 +511,11 @@ object GraphAnn {
           .drop("__r"))
       .groupBy(col("__qid"), col("__node"))
       .agg(first(col("cosine")).as("cosine"))
-      .localCheckpoint(true)
+      .transform(SessionCache.cut(_, eager = true))
     // visited tracks (query, node) pairs only — scoring re-derives
     // cosine from dst_vec, so the accumulation stays 2 columns wide
     var visited = entry.select(col("__qid"), col("__node"))
-      .localCheckpoint(true)
+      .transform(SessionCache.cut(_, eager = true))
     var ranked: DataFrame = null
     var frontier = entry.select(col("__qid"), col("__node"))
     // dedup (query, candidate) and keep ONE dst_vec before the
@@ -546,7 +548,7 @@ object GraphAnn {
           col("__node") === col("src"), "left_semi")
         ranked = ok.join(broadcast(entryLive), Seq("__node"))
           .select(col("__qid"), col("__node"), col("cosine"))
-          .localCheckpoint(true)
+          .transform(SessionCache.cut(_, eager = true))
       }
       val cand1 = dedup(oneHop)
       val pass1 = passing(cand1)
@@ -569,16 +571,17 @@ object GraphAnn {
           rankCosine(col("__vec"), col("__qv")).as("cosine"))
       val fresh = scored
         .join(visited, Seq("__qid", "__node"), "left_anti")
-        .localCheckpoint(true)
-      // NOTE: unlike [[searchAll]], the union re-pins here are NOT
+        .transform(SessionCache.cut(_, eager = true))
+      // NOTE: unlike [[searchAll]], the union re-cuts here are NOT
       // removable — the two-hop candidate plans re-reference the
-      // union's attributes across rounds and an uncut lineage trips
+      // union's attributes across rounds and an uncut plan trips
       // Catalyst exprId aliasing ("key not found: __node#…"); the
-      // checkpoint is the lineage cut, not just a perf pin
+      // cut's LogicalRDD leaf is the plan-level lineage cut, not just
+      // a perf pin
       visited = visited
         .unionByName(fresh.select(col("__qid"), col("__node")))
-        .localCheckpoint(true)
-      ranked = ranked.unionByName(fresh).localCheckpoint(true)
+        .transform(SessionCache.cut(_, eager = true))
+      ranked = SessionCache.cut(ranked.unionByName(fresh), eager = true)
       frontier = fresh
         .withColumn("__r", row_number().over(wq)).where(col("__r") <= beam)
         .select(col("__qid"), col("__node"))

@@ -33,12 +33,12 @@ import org.apache.spark.sql.functions._
   * rank table (|V| rows, two longs) onto edges, one map-side-
   * combinable integer sum keyed by dst, and one left join back onto
   * the vertex set — never more than |E| rows in flight, no windows,
-  * no driver-side state. Ranks are eagerly `localCheckpoint`ed each
-  * round (the [[Clusters]] discipline: the rank frame feeds the next
-  * round's plan twice, so untruncated lineage doubles per iteration
-  * and ANALYSIS time, not data, becomes the bottleneck; a cluster
-  * deployment with executor loss in scope would swap in reliable
-  * `checkpoint()`).
+  * no driver-side state. Ranks are eagerly cut
+  * ([[graft.operators.SessionCache.cut]]) each round (the
+  * [[Clusters]] discipline: the rank frame feeds the next round's
+  * plan twice, so an uncut plan doubles per iteration and ANALYSIS
+  * time, not data, becomes the bottleneck; the cut keeps its RDD
+  * lineage, so blocks lost with an executor recompute).
   *
   * Contract notes:
   *  - Dangling vertices (outdeg 0) contribute nothing — their mass
@@ -64,11 +64,11 @@ object LinkGraph {
     *         `rank_units` BIGINT). Σ rank_units ≤ |V| * scale (mass
     *         only evaporates, via flooring and dangling vertices).
     */
-  /** @param checkpoint eagerly localCheckpoint each round's ranks
-    *        (the default — see the lineage note above). `false` keeps
-    *        the whole loop one lazy plan: right for tiny graphs and
-    *        for plan-shape audits (PlanSpec inspects the per-round
-    *        aggregation, which a checkpoint boundary would hide).
+  /** @param checkpoint eagerly cut each round's ranks (the default
+    *        — see the lineage note above). `false` keeps the whole
+    *        loop one lazy plan: right for tiny graphs and for
+    *        plan-shape audits (PlanSpec inspects the per-round
+    *        aggregation, which a cut would hide).
     */
   def pageRankUnits(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", iterations: Int = 3,
@@ -80,7 +80,7 @@ object LinkGraph {
     val src = col(srcCol).cast("long").as("id")
     val dst = col(dstCol).cast("long").as("id")
     def bound(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
+      if (checkpoint) graft.operators.SessionCache.cut(df, eager = true) else df
     // vertices and out-degrees feed EVERY round's plan — materialize
     // them once (a distinct and a groupBy per iteration otherwise)
     val vertices = bound(

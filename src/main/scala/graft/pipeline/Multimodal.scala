@@ -555,9 +555,8 @@ object Multimodal {
   def mediaCurationReport(media: DataFrame, targetW: Int, targetH: Int,
       idCol: String = "media_id", payloadCol: String = "payload"): DataFrame = {
     val spark = media.sparkSession
-    val sigs = pixelSignatures(media, idCol, payloadCol).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.operators.SessionCache.scoped(
+        pixelSignatures(media, idCol, payloadCol).toDF()) { sigs =>
       val decoded = sigs.where(col("width") > 0)
       val reps = decoded.groupBy(col("pixel_md5"))
         .agg(min(col("media_id")).as("media_id"),
@@ -584,7 +583,7 @@ object Multimodal {
       val rows = report.collect()
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toSeq, 1), report.schema)
-    } finally sigs.unpersist()
+    }
   }
 
   /** Image–text PAIR curation — the LAION/CLIP-filter pipeline shape

@@ -138,7 +138,7 @@ object Quantization {
     */
   def quantizedTopK(emb: DataFrame, queryId: Long, k: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = graft.operators.SessionCache.pinCut(quantized(emb, vecCol)
+    val q = graft.operators.SessionCache.cut(quantized(emb, vecCol)
       .select(col(idCol).as("vec_id"), col("qvec")))
     val queryVec = q.where(col("vec_id") === queryId)
       .select(col("qvec").as("query_qvec"))
@@ -296,7 +296,7 @@ object Quantization {
     // the scoring scan otherwise EACH re-run the corpus-wide min/max
     // range aggregation embedded in quantized() — a doubled full
     // corpus pass at scale.
-    val q = graft.operators.SessionCache.pinCut(quantized(emb, vecCol)
+    val q = graft.operators.SessionCache.cut(quantized(emb, vecCol)
       .select(col(idCol), col(vecCol), col("qvec")))
     val queryQvec = q.where(col(idCol) === queryId)
       .select(col("qvec").as("query_qvec"))

@@ -831,7 +831,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label", qidCol: String = "query_id",
       qvecCol: String = "query_vec", qlabelCol: String = "query_label"): DataFrame = {
-    val cands = graft.operators.SessionCache.pinCut(emb
+    val cands = graft.operators.SessionCache.cut(emb
       .crossJoin(broadcast(
         queries.select(col(qidCol), col(qvecCol), col(qlabelCol))))
       .where(col(idCol) =!= col(qidCol))
@@ -987,7 +987,7 @@ object Similarity {
       .where(col("__bucket").isNotNull)
     val bucketed =
       if (persistBuckets)
-        graft.operators.SessionCache.pinCut(bucketedRaw)
+        graft.operators.SessionCache.cut(bucketedRaw)
       else bucketedRaw
     val keepable = bucketed.groupBy("__bucket")
       .agg(count(lit(1)).as("__n"))
@@ -1082,7 +1082,7 @@ object Similarity {
       .join(broadcast(centDf), Seq("cell"))
       .select(col(idCol), col(vecCol), col("cell"),
         cosine(col(vecCol), col("__c")).as("centroid_cos"))
-      .transform(graft.operators.SessionCache.pinCut(_))
+      .transform(graft.operators.SessionCache.cut(_))
     val keepable = celled.groupBy("cell")
       .agg(count(lit(1)).as("__n"))
       .where(col("__n") <= maxCellSize)

@@ -49,7 +49,7 @@ object Spans {
     // out before it (round-18, guide §6/§8; no-op at corpus scale,
     // where the scan is already split).
     val df = graft.operators.Spread.perRowHeavy(dfIn)
-    val win = graft.operators.SessionCache.pinCut(
+    val win = graft.operators.SessionCache.cut(
       df.select(col(idCol).as("doc_id"),
         posexplode(graft.functions.NGramFunctions.charNGrams(col(textCol), k))
           .as(Seq("pos", "gram")))
@@ -116,7 +116,7 @@ object Spans {
     // same linear per-char window floor as [[duplicatedWindowSpans]] —
     // spread a small corpus before the scan (no-op at corpus scale)
     val df = graft.operators.Spread.perRowHeavy(dfIn)
-    val win = graft.operators.SessionCache.pinCut(
+    val win = graft.operators.SessionCache.cut(
       df.select(col(idCol).as("doc_id"),
         posexplode(graft.functions.NGramFunctions.charNGrams(col(textCol), k))
           .as(Seq("pos", "gram")))
@@ -165,14 +165,14 @@ object Spans {
       .where(col("match_len") >= minLen)
       .select(col("doc_a"), col("pos_a"), col("doc_b"), col("pos_b"),
         col("match_len"))
-    // Materialize the (small) merged-match set eagerly: the pinCut
+    // Materialize the (small) merged-match set eagerly: the cut
     // above shares the posexplode+md5 scan across the df-cap count and
     // both pair sides within THIS call, and the harness releases its
     // corpus-scale blocks after the query's action (round-18 — the
-    // explicit unpersist the pin replaced is now SessionCache.release's
-    // job). localCheckpoint truncates the merged lineage, so downstream
-    // excision never re-derives the frame.
-    merged.localCheckpoint(true)
+    // explicit unpersist it replaced is now SessionCache.release's
+    // job). This eager cut gives downstream excision a LogicalRDD leaf,
+    // so it never re-derives the frame while the blocks are held.
+    graft.operators.SessionCache.cut(merged, eager = true)
   }
 
   /** The corpus with every NON-FIRST occurrence of each maximal

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, Filter, Join, JoinHint, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -717,8 +718,21 @@ object MvCatalog {
   }
 }
 
+object AggregateRewriteRule {
+
+  /** MV paths whose freshness check refused an `Aggregate` in an
+    * earlier pass of the same optimizer run. The rule runs in
+    * Catalyst's fixed-point operator-optimization batches, so without
+    * the tag one query would re-list the base and re-log the refusal
+    * on every pass. The optimizer works on a clone of the analyzed
+    * plan, so the tag lives for one query's optimization only.
+    */
+  private val FreshnessRefused = TreeNodeTag[Set[String]]("graft.mv.freshnessRefused")
+}
+
 class AggregateRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
   import MaterializedAggregate.MvDef
+  import AggregateRewriteRule.FreshnessRefused
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (MvCatalog.isEmpty(session) || MvCatalog.isSuspended) plan
@@ -730,9 +744,22 @@ class AggregateRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         // an optimization must never be the reason a plan errors —
         // but it refuses LOUDLY: a misregistered rollup that never
         // navigates and never reports is a silent performance cliff.
+        // Freshness LAST (driver-side listing — only candidates that
+        // structurally matched pay it), and once per optimizer run:
+        // a refusal tags the Aggregate, and later passes skip that
+        // candidate (refusing is the safe side: the query reads the
+        // base).
+        val refused = agg.getTagValue(FreshnessRefused).getOrElse(Set.empty[String])
         MvCatalog.all(session)
+          .filterNot(mv => refused(mv.mvPath))
           .flatMap { mv =>
-            (try rewrite(agg, mv)
+            (try rewrite(agg, mv).filter { _ =>
+              freshnessOk(mv) || {
+                agg.setTagValue(FreshnessRefused,
+                  agg.getTagValue(FreshnessRefused).getOrElse(Set.empty[String]) + mv.mvPath)
+                false
+              }
+            }
             catch {
               case scala.util.control.NonFatal(e) =>
                 logWarning(s"MV candidate ${mv.mvPath} failed to " +
@@ -1099,25 +1126,21 @@ class AggregateRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
         n.name == o.name && n.dataType == o.dataType && n.exprId == o.exprId
       }
     if (!same) return None
-    // freshness LAST (driver-side listing — only candidates that
-    // structurally matched pay it): a base that drifted from its
-    // registration fingerprint refuses loudly rather than serving
-    // pre-drift answers. Maintained rollups are exempt from the
-    // static fingerprint — their incremental partials fold appends in
-    // — but NOT from deletes: a registered first-level entry that
-    // vanished (the retention partition-drop shape) means base rows
-    // were removed outside the append-only maintenance contract, and
-    // the rollup's partials still aggregate them. Refuse (the query
-    // falls back to the post-delete base — correct, just slower)
-    // until `StreamingMvMaintenance.retract` + re-registration
-    // re-arm navigation.
-    if (!freshnessOk(mv)) return None
     Some(rewritten)
   }
 
-  /** Freshness LAST (driver-side listing — only candidates that
-    * structurally matched pay it); shared by the flat/star path and
-    * the grouping-sets (Expand) path.
+  /** The freshness gate [[apply]] runs on a structural match of
+    * either path (flat/star or grouping sets): a base that drifted
+    * from its registration fingerprint refuses loudly rather than
+    * serving pre-drift answers. Maintained rollups are exempt from
+    * the static fingerprint — their incremental partials fold appends
+    * in — but NOT from deletes: a registered first-level entry that
+    * vanished (the retention partition-drop shape) means base rows
+    * were removed outside the append-only maintenance contract, and
+    * the rollup's partials still aggregate them. Refuse (the query
+    * falls back to the post-delete base — correct, just slower) until
+    * `StreamingMvMaintenance.retract` + re-registration re-arm
+    * navigation.
     */
   private def freshnessOk(mv: MvDef): Boolean = {
     if (!mv.maintained && mv.baseFingerprint.exists(fp =>
@@ -1433,13 +1456,12 @@ class AggregateRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     val rewritten = Aggregate(agg.groupingExpressions, newAggExprs,
       Expand(newProjs, newOutput, newChild))
 
-    // soundness gate + freshness: identical to the flat path
+    // soundness gate: identical to the flat path (freshness: [[apply]])
     val same = rewritten.output.length == agg.output.length &&
       rewritten.output.zip(agg.output).forall { case (nw, o) =>
         nw.name == o.name && nw.dataType == o.dataType && nw.exprId == o.exprId
       }
     if (!same) return None
-    if (!freshnessOk(mv)) return None
     Some(rewritten)
   }
 }

@@ -5175,7 +5175,7 @@ object PipelineQueries {
       (s, dir) => {
         // ONE shingle scan + cache feeds both chains (the
         // minHashNearDupsFromShingles seam exists for exactly this)
-        val shingled = graft.operators.SessionCache.pinCut(
+        val shingled = graft.operators.SessionCache.cut(
           Dedup.wordShingles(Tables.documents(s, dir), n = 3))
         val exact = Dedup.jaccardPairs(shingled, threshold = 0.8,
           maxShingleDf = 1000).select(col("doc_a"), col("doc_b"))
@@ -6533,25 +6533,25 @@ object PipelineQueries {
     // adaptive-threshold composition (p73 x the p104 primitive): the
     // classic "drop the weird tail per language, with thresholds the
     // corpus derives for itself" curation rule. Cache discipline: the
-    // scored frame caches only while the languages-sized bounds
-    // materialize (one LM pass), then RELEASES — the final filter
-    // recomputes one pass instead of pinning a corpus-grain cache for
-    // the rest of the 180+-query harness session.
+    // scored frame is cached (SessionCache.scoped) only while the
+    // languages-sized bounds materialize (one LM pass) — the final
+    // filter recomputes one pass instead of pinning a corpus-grain
+    // cache for the rest of the 180+-query harness session.
     QueryDef("p105_perplexity_band",
       (s, dir) => {
         import s.implicits._
         val docs = Tables.documents(s, dir)
         val scored = TextAnalysis.bigramLogProb(docs)
           .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-          .cache()
-        val bounds = Sampling.sampleQuantiles(scored, "lang",
-            "avg_logprob", "doc_id", k = 64, qs = Seq(0.1, 0.95),
-            salt = "ppl")
-          .select(col("lang"), col("p10").as("lo"), col("p95").as("hi"))
-          .collect()
-          .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-          .toSeq
-        scored.unpersist(false)
+        val bounds = graft.operators.SessionCache.scoped(scored) { sc =>
+          Sampling.sampleQuantiles(sc, "lang",
+              "avg_logprob", "doc_id", k = 64, qs = Seq(0.1, 0.95),
+              salt = "ppl")
+            .select(col("lang"), col("p10").as("lo"), col("p95").as("hi"))
+            .collect()
+            .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
+            .toSeq
+        }
         scored.join(broadcast(bounds.toDF("lang", "lo", "hi")), Seq("lang"))
           .where(col("avg_logprob").between(col("lo"), col("hi")))
           .select("lang", "doc_id", "n_tokens", "avg_logprob", "lo", "hi")
@@ -6921,12 +6921,10 @@ object PipelineQueries {
   /** The p109 recipe chain's staged frames, shared by the e2e gate
     * (p109) and the yield report (p110) so the two can never drift.
     * `scoredAll` (quality features of EVERY doc — the one text scan)
-    * is MATERIALIZED as the narrow docs × 6-scalar frame
-    * ([[graft.operators.Materialize.boundary]]) rather than cached:
-    * each gate leaves nothing pinned in the session cache manager for
-    * the rest of a long harness run, and the boundary is exactly the
-    * one-time stage write a 100 TB recipe build performs. Every stage
-    * after it is column algebra over the read-back.
+    * is an eager [[graft.operators.SessionCache.cut]] of the narrow
+    * docs × 6-scalar frame: every stage after it is column algebra
+    * over the cut, and the harness releases its blocks after the
+    * gate's action.
     */
   private final case class RecipeStages(scoredAll: DataFrame,
       scored: DataFrame, capped: DataFrame, sized: DataFrame,
@@ -6934,11 +6932,11 @@ object PipelineQueries {
 
   private def recipeStages(s: SparkSession, dir: String): RecipeStages = {
     val docs = Tables.documents(s, dir)
-    val scoredAll = graft.operators.Materialize.boundary(
+    val scoredAll = graft.operators.SessionCache.cut(
       TextAnalysis.qualityFeatures(docs)
         .select(col("source"), col("lang"), col("doc_id"),
           col("n_chars"), col("n_tokens"), col("quality_score")),
-      sys.props("java.io.tmpdir") + "/graft_recipe_boundary/scored_all")
+      eager = true)
     val scored = Pii.kAnonymitySuppress(scoredAll, Seq("lang", "source"),
       k = 5).drop("group_n")
     val capped = scored.join(

@@ -67,11 +67,9 @@ object StreamingDrift {
             org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("cnt",
             org.apache.spark.sql.types.LongType)))))
-    val merged = pre
-      .unionByName(Snapshots.bucketTotals(batch, buckets))
-      .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.operators.SessionCache.scoped(pre
+        .unionByName(Snapshots.bucketTotals(batch, buckets))
+        .groupBy(col("bucket")).agg(sum(col("cnt")).as("cnt"))) { merged =>
       Snapshots.tokenDriftFromCounts(
         spark.read.parquet(referencePath), merged, buckets)
         .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
@@ -86,7 +84,7 @@ object StreamingDrift {
           .forEach(p => java.nio.file.Files.delete(p))
         v -= 1
       }
-    } finally { merged.unpersist(); () }
+    }
   }
 
   /** Writer committing one drift row per micro-batch to

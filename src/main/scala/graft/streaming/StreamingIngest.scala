@@ -118,9 +118,8 @@ object StreamingIngest {
     // admission flatMapGroupsWithState and its state-store shuffle,
     // once per action (measured: the two-batch st28 stream ran ~3×
     // the direct processBatch cost before this pin; ~2× after).
-    val pinned = batch.persist()
-    try processPinned(pinned, batchId, cfg, lm, clf)
-    finally { pinned.unpersist(); () }
+    graft.operators.SessionCache.scoped(batch)(
+      processPinned(_, batchId, cfg, lm, clf))
   }
 
   private def processPinned(batch: DataFrame, batchId: Long, cfg: Config,
@@ -162,23 +161,21 @@ object StreamingIngest {
     // write and the counter write below each consume it, and the
     // chain above it (dedup join + two scoring projections) is the
     // expensive part of the micro-batch
-    val withBucket = band.withColumn("bucket",
-      expr(s"n_tokens div CAST(${cfg.bucketWidth} AS BIGINT)"))
-      .persist()
-    val ranked = withBucket.withColumn("__r",
-      row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("bucket")).orderBy(col("doc_id"))) - 1)
-      .join(broadcast(counters), Seq("bucket"), "left")
-      .withColumn("__dealt", coalesce(col("dealt"), lit(0L)) + col("__r"))
-      .select(col("source"), col("doc_id"), col("n_tokens"),
-        col("tokens_before"), col("quality_score"), col("avg_logprob"),
-        col("bucket"),
-        expr(s"__dealt div CAST(${cfg.batchSize} AS BIGINT)").as("batch_id"),
-        (col("__dealt") % cfg.batchSize).as("slot"))
+    graft.operators.SessionCache.scoped(band.withColumn("bucket",
+        expr(s"n_tokens div CAST(${cfg.bucketWidth} AS BIGINT)"))) { withBucket =>
+      val ranked = withBucket.withColumn("__r",
+        row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("bucket")).orderBy(col("doc_id"))) - 1)
+        .join(broadcast(counters), Seq("bucket"), "left")
+        .withColumn("__dealt", coalesce(col("dealt"), lit(0L)) + col("__r"))
+        .select(col("source"), col("doc_id"), col("n_tokens"),
+          col("tokens_before"), col("quality_score"), col("avg_logprob"),
+          col("bucket"),
+          expr(s"__dealt div CAST(${cfg.batchSize} AS BIGINT)").as("batch_id"),
+          (col("__dealt") % cfg.batchSize).as("slot"))
 
-    // idempotent commits: this batch's own partitions, overwritten.
-    try {
+      // idempotent commits: this batch's own partitions, overwritten.
       ranked.write.mode("overwrite").parquet(s"${cfg.outPath}/batch=$batchId")
       val newCounters = counters
         .unionByName(withBucket.groupBy(col("bucket"))
@@ -186,7 +183,7 @@ object StreamingIngest {
         .groupBy(col("bucket")).agg(sum(col("dealt")).as("dealt"))
       newCounters.write.mode("overwrite")
         .parquet(s"${cfg.statePath}/batch=$batchId")
-    } finally { withBucket.unpersist(); () }
+    }
   }
 
   /** The per-bucket dealt counters as of the latest committed state

@@ -105,9 +105,7 @@ object StreamingMediaIngest {
     val spark = batch.sparkSession
     import spark.implicits._
 
-    val sigs = signatures(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.operators.SessionCache.scoped(signatures(batch)) { sigs =>
       // 1. admission: first-k per source by media_id, counters carried
       //    from the latest state snapshot before this batch
       val prev = latestCounters(spark, cfg, batchId)
@@ -161,7 +159,7 @@ object StreamingMediaIngest {
             .otherwise(lit(0L)).as("sum_rgb"))
       verdicts.write.mode("overwrite")
         .parquet(s"${cfg.outPath}/batch=$batchId")
-    } finally sigs.unpersist()
+    }
   }
 
   def pipeline(media: Dataset[MediaIn], cfg: Config): DataStreamWriter[MediaIn] =

@@ -87,9 +87,7 @@ object StreamingNovelty {
           s"but $outPath/batch=$batchId does not — a fresh checkpoint must " +
           "start over fresh bloom/sink artifact paths")
     val prePath = preBatchPath(bloomPath, batchId)
-    val sh = Dedup.wordShingles(batch, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.operators.SessionCache.scoped(Dedup.wordShingles(batch, n)) { sh =>
       // judge against the PRE-batch filter version...
       val (words, k) = BloomFunctions.readBloom(spark, prePath)
       val filterDf = Seq(Tuple1(words.toSeq)).toDF("__bloom")
@@ -124,7 +122,7 @@ object StreamingNovelty {
           .forEach(p => java.nio.file.Files.delete(p))
         v -= 1
       }
-    } finally { sh.unpersist(); () }
+    }
   }
 
   /** Writer committing (doc_id, n_shingles, n_novel, novelty) rows

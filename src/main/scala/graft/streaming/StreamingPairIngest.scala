@@ -98,18 +98,16 @@ object StreamingPairIngest {
     val spark = batch.sparkSession
     import spark.implicits._
 
-    val sigs = signatures(batch)
-      .withColumn("aligned",
-        coalesce(col("width") > 0 &&
-          regexp_extract(col("caption"), "(\\d+)x(\\d+)", 1).cast("int")
-            === col("width") &&
-          regexp_extract(col("caption"), "(\\d+)x(\\d+)", 2).cast("int")
-            === col("height"), lit(false)))
-      .withColumn("caption_ok",
-        greatest(coalesce(size(split(trim(col("caption")), "\\s+")), lit(0)),
-          lit(0)) >= cfg.minCaptionTokens)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.operators.SessionCache.scoped(signatures(batch)
+        .withColumn("aligned",
+          coalesce(col("width") > 0 &&
+            regexp_extract(col("caption"), "(\\d+)x(\\d+)", 1).cast("int")
+              === col("width") &&
+            regexp_extract(col("caption"), "(\\d+)x(\\d+)", 2).cast("int")
+              === col("height"), lit(false)))
+        .withColumn("caption_ok",
+          greatest(coalesce(size(split(trim(col("caption")), "\\s+")), lit(0)),
+            lit(0)) >= cfg.minCaptionTokens)) { sigs =>
       // 1. admission: first-k per source by pair_id, counters carried
       val prev = latestCounters(spark, cfg, batchId)
       val wAdm = org.apache.spark.sql.expressions.Window
@@ -158,7 +156,7 @@ object StreamingPairIngest {
           col("width"), col("height"))
       verdicts.write.mode("overwrite")
         .parquet(s"${cfg.outPath}/batch=$batchId")
-    } finally sigs.unpersist()
+    }
   }
 
   def pipeline(pairs: Dataset[PairIn], cfg: Config): DataStreamWriter[PairIn] =

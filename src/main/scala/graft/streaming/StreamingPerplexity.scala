@@ -93,14 +93,12 @@ object StreamingPerplexity {
     */
   def frozenLm(docs: DataFrame, lambda: Double = 0.75,
       minBigramCount: Long = 1L, maxVocab: Int = Int.MaxValue): LmModel = {
-    val pairGrain = docs
-      .select(graft.pipeline.TextAnalysis.tokens(col("text")).as("__w"))
-      .select(col("__w"), posexplode(col("__w")).as(Seq("pos", "term")))
-      .select(col("term"),
-        when(col("pos") > 0, element_at(col("__w"), col("pos"))).as("prev"))
-      .groupBy(col("prev"), col("term")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.operators.SessionCache.scoped(docs
+        .select(graft.pipeline.TextAnalysis.tokens(col("text")).as("__w"))
+        .select(col("__w"), posexplode(col("__w")).as(Seq("pos", "term")))
+        .select(col("term"),
+          when(col("pos") > 0, element_at(col("__w"), col("pos"))).as("prev"))
+        .groupBy(col("prev"), col("term")).agg(count(lit(1)).as("c"))) { pairGrain =>
       val termGrain = pairGrain.groupBy(col("term"))
         .agg(sum(col("c")).as("tc"))
       // n = TRUE token total (pre-cap) — the mixture denominator must
@@ -132,7 +130,7 @@ object StreamingPerplexity {
             (p0 + " " + t) -> c
         }.toMap
       LmModel(lambda, n, uni, bi)
-    } finally { pairGrain.unpersist(); () }
+    }
   }
 
   /** Score one document under the frozen model — the pinned mixture

@@ -6,23 +6,23 @@ import org.apache.spark.storage.StorageLevel
 import graft.operators.SessionCache
 
 /** [[QueryLoop]]: a throwing query is recorded and skipped past, and
-  * every query's persists are released before the next one runs.
+  * every query's cuts are released before the next one runs.
   */
 class QueryLoopSpec extends SparkSpec {
 
   test("one failure recorded, the next query runs, release after each") {
-    var boomPin: DataFrame = null
-    var okPin: DataFrame = null
-    var boomPinAtOk: StorageLevel = null
+    var boomCut: DataFrame = null
+    var okCut: DataFrame = null
+    var boomCutAtOk: StorageLevel = null
     val queries: Seq[(String, QueryLoop.Query)] = Seq(
       "boom" -> { (s, _) =>
-        boomPin = SessionCache.pin(s.range(3).toDF())
+        boomCut = SessionCache.cut(s.range(3).toDF())
         throw new IllegalStateException("boom")
       },
       "ok" -> { (s, _) =>
-        boomPinAtOk = boomPin.storageLevel
-        okPin = SessionCache.pin(s.range(5).toDF())
-        okPin
+        boomCutAtOk = cutRdd(boomCut).getStorageLevel
+        okCut = SessionCache.cut(s.range(5).toDF())
+        okCut
       })
     val ran = Seq.newBuilder[String]
     val failed = QueryLoop.run("spec", queries) { (name, fn) =>
@@ -31,8 +31,8 @@ class QueryLoopSpec extends SparkSpec {
     }
     assert(failed === Seq("boom"))
     assert(ran.result() === Seq("ok"))
-    assert(boomPinAtOk === StorageLevel.NONE)
-    assert(okPin.storageLevel === StorageLevel.NONE)
+    assert(boomCutAtOk === StorageLevel.NONE)
+    assert(cutRdd(okCut).getStorageLevel === StorageLevel.NONE)
   }
 
   test("select keeps the named queries and drops unknown names") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +20,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set(key, "false")
     try body finally spark.conf.set(key, prior)
   }
+
+  /** The RDD holding a [[graft.operators.SessionCache.cut]] frame's
+    * blocks: the one under its `LogicalRDD` leaf.
+    */
+  def cutRdd(df: DataFrame): org.apache.spark.rdd.RDD[_] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.getOrElse(fail(s"not a cut: ${df.queryExecution.analyzed.nodeName}"))
 
   override def afterAll(): Unit = {
     // shared across suites in one JVM — do not stop

@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -1267,6 +1269,54 @@ class MvRewriteSpec extends SparkSpec {
       assert(!scannedPaths(q).exists(_.contains("fact_part")))
       assert(answers(q) === Map("d2" -> ((7.0, 2L)), "d3" -> ((5.0, 1L))))
     } finally {
+      spark.conf.unset("spark.graft.mv.freshnessTtlMs")
+      MvCatalog.clear()
+    }
+  } }
+
+  test("a refused maintained MV warns once per query") { withNoAqe {
+    MvCatalog.clear()
+    spark.conf.set("spark.graft.mv.freshnessTtlMs", "0")
+    val tmp = java.nio.file.Files.createTempDirectory("mv_refuse_log")
+    val rbase = tmp.resolve("fact_part").toString
+    val rmv = tmp.resolve("mv.parquet").toString
+    Seq(("d1", "A", 1.0), ("d2", "B", 2.0)).toDF("day", "g", "v")
+      .write.partitionBy("day").parquet(rbase)
+    graft.streaming.StreamingMvMaintenance.processBatch(
+      spark.read.parquet(rbase), 0L, rmv, Seq("day", "g"), Seq("v"))
+    MaterializedAggregate.registerExisting(spark, rbase, rmv,
+      Seq("day", "g"), Seq("v"), maintained = true)
+    def q = spark.read.parquet(rbase).groupBy(col("day"))
+      .agg(sum("v").as("s"))
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "mv-refusals", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN) {
+          warns.add(e.getMessage.getFormattedMessage); ()
+        }
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger(classOf[AggregateRewriteRule].getName)
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    logger.addAppender(appender)
+    try {
+      assert(scannedPaths(q).exists(_.contains("mv.parquet")))
+      val dropped = new java.io.File(rbase, "day=d1")
+      Option(dropped.listFiles()).foreach(_.foreach(_.delete()))
+      dropped.delete()
+      spark.catalog.refreshByPath(rbase)
+      warns.clear()
+      assert(q.collect().map(_.getString(0)).toSeq === Seq("d2"))
+      assert(warns.asScala.count(_.contains("refused")) === 1, warns)
+      warns.clear()
+      assert(scannedPaths(q).exists(_.contains("fact_part")))
+      assert(warns.asScala.count(_.contains("refused")) === 1, warns)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
       spark.conf.unset("spark.graft.mv.freshnessTtlMs")
       MvCatalog.clear()
     }
