@@ -85,6 +85,14 @@ object RecallCurve {
       per.agg(avg(col("recall"))).head().getDouble(0)
     }
 
+    // one JSON line per configuration; the searches' cuts are released
+    // after each, so ~30 searches over one edge build do not pile them up
+    def emit(line: String): Unit = {
+      println(line)
+      Console.out.flush()
+      SessionCache.release(); ()
+    }
+
     val k = 10
     SessionCache.scoped(Similarity.bruteSearchAll(emb, queries, k)
       .select(col("query_id"), col("vec_id"))) { truth =>
@@ -98,8 +106,7 @@ object RecallCurve {
     Seq(1, 2, 4, 8, 16).foreach { nprobe =>
       val r = meanRecall(
         Similarity.ivfSearchAll(emb, queries, centroids, k, nprobe), truth)
-      println(s"""{"family":"ivf","nlist":$nlist,"nprobe":$nprobe,"mean_recall":$r,"q":$nQ}""")
-      Console.out.flush()
+      emit(s"""{"family":"ivf","nlist":$nlist,"nprobe":$nprobe,"mean_recall":$r,"q":$nQ}""")
     }
     }
 
@@ -112,15 +119,13 @@ object RecallCurve {
       val r = meanRecall(
         Similarity.lshSearchAll(emb, queries, k, bits = bits,
           dim = Some(dim)), truth)
-      println(s"""{"family":"lsh","bits":$bits,"probes":1,"mean_recall":$r,"q":$nQ}""")
-      Console.out.flush()
+      emit(s"""{"family":"lsh","bits":$bits,"probes":1,"mean_recall":$r,"q":$nQ}""")
     }
     for (probes <- Seq(2, 3, 5)) {
       val r = meanRecall(
         Similarity.lshSearchAll(emb, queries, k, bits = 4, probes = probes,
           dim = Some(dim)), truth)
-      println(s"""{"family":"lsh","bits":4,"probes":$probes,"mean_recall":$r,"q":$nQ}""")
-      Console.out.flush()
+      emit(s"""{"family":"lsh","bits":4,"probes":$probes,"mean_recall":$r,"q":$nQ}""")
     }
     }
 
@@ -149,29 +154,26 @@ object RecallCurve {
           .createTempDirectory(s"rc-nsw-append-$tag").toString + "/idx"
         val base = emb.where(col("vec_id") % 2 === 0)
         val batch = emb.where(col("vec_id") % 2 =!= 0)
-        GraphAnn.writeIndex(base, hubs, path, dim = Some(dim),
-          splitBucket = split)
+        GraphAnn.writeIndex(base, hubs, path, splitBucket = split)
         GraphAnn.appendToIndex(batch, emb, hubs, path, batchId = "b1",
-          dim = Some(dim), splitBucket = split)
+          splitBucket = split)
         meanRecall(GraphAnn.searchAll(
           GraphAnn.readEdges(spark, path), hubs, queries, k), truth)
       }
       for ((tag, split) <- Seq(
           ("default", Some(GraphAnn.AutoSplit)), ("unsplit", None))) {
         val r = lifecycleRecall(split, tag)
-        println(s"""{"family":"nsw_append_$tag","hubs":$nHubs,"mean_recall":$r,"q":$nQ}""")
-        Console.out.flush()
+        emit(s"""{"family":"nsw_append_$tag","hubs":$nHubs,"mean_recall":$r,"q":$nQ}""")
       }
     }
 
     if (nswNeeded)
-    SessionCache.scoped(GraphAnn.buildEdges(emb, hubs, dim = Some(dim))) { edges =>
+    SessionCache.scoped(GraphAnn.buildEdges(emb, hubs)) { edges =>
     edges.count()
     if (fam("nsw")) for (beam <- Seq(4, 8, 16); rounds <- Seq(2, 3)) {
       val r = meanRecall(GraphAnn.searchAll(edges, hubs, queries, k,
         beam = beam, rounds = rounds), truth)
-      println(s"""{"family":"nsw","hubs":$nHubs,"beam":$beam,"rounds":$rounds,"mean_recall":$r,"q":$nQ}""")
-      Console.out.flush()
+      emit(s"""{"family":"nsw","hubs":$nHubs,"beam":$beam,"rounds":$rounds,"mean_recall":$r,"q":$nQ}""")
     }
 
     // FILTERED graph search: beam x selectivity — the tuning evidence
@@ -191,8 +193,7 @@ object RecallCurve {
       if (fam("nsw_filtered")) for (beam <- Seq(8, 16, 32)) {
         val r = meanRecall(GraphAnn.searchAll(edges, hubs, queries, k,
           beam = beam, rounds = 3, allowed = Some(allowed)), ftruth)
-        println(s"""{"family":"nsw_filtered","selectivity":"1/$m","beam":$beam,"rounds":3,"mean_recall":$r,"q":$nQ}""")
-        Console.out.flush()
+        emit(s"""{"family":"nsw_filtered","selectivity":"1/$m","beam":$beam,"rounds":3,"mean_recall":$r,"q":$nQ}""")
       }
       // ACORN predicate-aware walk (round 15): same index, same
       // truth — the two-hop rule + passing-hub entry must hold
@@ -201,8 +202,7 @@ object RecallCurve {
       for ((beam, rounds) <- Seq((8, 3), (16, 3), (16, 4), (32, 3))) {
         val r = meanRecall(GraphAnn.searchAllAcorn(edges, hubs, queries,
           allowed, k, beam = beam, rounds = rounds), ftruth)
-        println(s"""{"family":"nsw_filtered_acorn","selectivity":"1/$m","beam":$beam,"rounds":$rounds,"mean_recall":$r,"q":$nQ}""")
-        Console.out.flush()
+        emit(s"""{"family":"nsw_filtered_acorn","selectivity":"1/$m","beam":$beam,"rounds":$rounds,"mean_recall":$r,"q":$nQ}""")
       }
       // the AUTO path (selectivity-measured beam) — the deployment
       // default's recall, recorded next to the explicit sweep
@@ -210,8 +210,7 @@ object RecallCurve {
         val beamChosen = GraphAnn.acornAutoBeam(1.0 / m)
         val r = meanRecall(GraphAnn.searchAllAcornAuto(edges, hubs,
           queries, allowed, k, corpusSize = n), ftruth)
-        println(s"""{"family":"nsw_filtered_acorn_auto","selectivity":"1/$m","beam":$beamChosen,"rounds":3,"mean_recall":$r,"q":$nQ}""")
-        Console.out.flush()
+        emit(s"""{"family":"nsw_filtered_acorn_auto","selectivity":"1/$m","beam":$beamChosen,"rounds":3,"mean_recall":$r,"q":$nQ}""")
       }
       }
     }
@@ -226,8 +225,7 @@ object RecallCurve {
     if (fam("quant")) {
     val rInt8 = meanRecall(
       Quantization.quantizedSearchAll(emb, queries, k), truth)
-    println(s"""{"family":"int8","mean_recall":$rInt8,"q":$nQ}""")
-    Console.out.flush()
+    emit(s"""{"family":"int8","mean_recall":$rInt8,"q":$nQ}""")
     // PQ-ADC: sweep subspace count at the default ksub (code budget =
     // m bytes/vector). PQ approximates the inner product, so it
     // indexes the NORMALIZED corpus (cosine deployment recipe; truth
@@ -246,8 +244,7 @@ object RecallCurve {
       val rSl = meanRecall(
         Quantization.pqSearchAll(nemb, nq2, 50, m = m, ksub = 16,
           knownCount = n), truth)
-      println(s"""{"family":"pq","m":$m,"ksub":16,"mean_recall":$rPq,"shortlist50_coverage":$rSl,"q":$nQ}""")
-      Console.out.flush()
+      emit(s"""{"family":"pq","m":$m,"ksub":16,"mean_recall":$rPq,"shortlist50_coverage":$rSl,"q":$nQ}""")
     }
     }
     }

@@ -38,10 +38,10 @@ object SessionCache {
     * a block dropped by [[release]] or lost with an executor is
     * recomputed instead of failing the query. The RDD is registered
     * for [[release]]. The kept lineage costs driver and task time in
-    * loops that cut a union of earlier cuts each round: a task
-    * carries the narrow lineage of every earlier round (GraphAnn's
-    * ACORN search ships task binaries up to 10.9 MiB where a
-    * truncating checkpoint shipped 5.9 MiB).
+    * a loop that cuts a union of earlier cuts each round, because a
+    * task then carries the narrow lineage of every earlier round; a
+    * loop instead unions its per-round cuts and leaves the union
+    * uncut (GraphAnn's two searches).
     *
     * When the upstream runs: building the cut calls `toRdd`, and for
     * an adaptive plan that runs the upstream shuffle stages here, at

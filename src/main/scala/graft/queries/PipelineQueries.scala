@@ -556,7 +556,7 @@ object PipelineQueries {
       // UNSPLIT construction in SQL; the production default (writeIndex
       // without the pin) is the sub-bucketed scale-safe build
       GraphAnn.writeIndex(Tables.embeddings(s, dir), hubs, path,
-        dim = Some(EmbeddingDim), splitBucket = None)
+        splitBucket = None)
     path
   }
 
@@ -2137,10 +2137,9 @@ object PipelineQueries {
         // construction (the production default is the sub-bucketed
         // build; this gate's DuckDB oracle replays the coarse-bucket
         // pair step verbatim)
-        GraphAnn.writeIndex(even, hubs, nswLifePath, dim = Some(EmbeddingDim),
-          splitBucket = None)
+        GraphAnn.writeIndex(even, hubs, nswLifePath, splitBucket = None)
         GraphAnn.appendToIndex(odd, emb, hubs, nswLifePath,
-          batchId = "b1", dim = Some(EmbeddingDim), splitBucket = None)
+          batchId = "b1", splitBucket = None)
         GraphAnn.tombstoneIndex(
           emb.where(col("vec_id") % 50 === 7).select("vec_id"),
           nswLifePath, batchId = "t1")

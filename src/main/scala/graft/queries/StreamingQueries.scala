@@ -2941,7 +2941,6 @@ object StreamingQueries {
       // the seed even when both writes land in one mtime tick
       pinArrivalOrder(s, stage, seedFiles)
 
-      val dim = Some(PipelineQueries.EmbeddingDim)
       val q0 = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(stage)
         .writeStream
@@ -2950,7 +2949,7 @@ object StreamingQueries {
             // splitBucket = None: the gate's oracle replays the
             // unsplit construction (production default is sub-bucketed)
             graft.pipeline.GraphAnn.writeIndex(batch, hubs, index,
-              dim = dim, splitBucket = None)
+              splitBucket = None)
           else
             // corpus = everything arrived so far (seed + this batch):
             // candidates are batch × bucket-mate, batch-proportional
@@ -2959,8 +2958,7 @@ object StreamingQueries {
             // sub-bucketed)
             graft.pipeline.GraphAnn.appendToIndex(
               batch, Tables.embeddings(batch.sparkSession, dir), hubs,
-              index, batchId = s"b$batchId", dim = dim,
-              splitBucket = None)
+              index, batchId = s"b$batchId", splitBucket = None)
         }
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckpt).startScoped(s)

@@ -29,6 +29,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.getOrElse(fail(s"not a cut: ${df.queryExecution.analyzed.nodeName}"))
 
+  /** Drops every [[graft.operators.SessionCache.cut]] the test made,
+    * as [[QueryLoop]] does after each query: the suite shares one
+    * session, so an unreleased cut would be held until the JVM exits.
+    */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test)
+    finally { graft.operators.SessionCache.release(); () }
+
   override def afterAll(): Unit = {
     // shared across suites in one JVM — do not stop
     super.afterAll()

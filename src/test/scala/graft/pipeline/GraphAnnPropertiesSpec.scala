@@ -43,7 +43,7 @@ class GraphAnnPropertiesSpec extends SparkSpec {
       val queries = emb.where(col("vec_id") % 11 === 0)
         .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
       val got = GraphAnn.searchAll(
-        GraphAnn.buildEdges(emb, hubs, m = 4, dim = Some(dim), hubDegree = 16),
+        GraphAnn.buildEdges(emb, hubs, m = 4, hubDegree = 16),
         hubs, queries, k = 5, beam = 4, rounds = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       assert(got.nonEmpty, s"draw $draw returned nothing")
@@ -77,10 +77,10 @@ class GraphAnnPropertiesSpec extends SparkSpec {
         .createTempDirectory(s"graft-gap-$draw").toString + "/idx"
       val base = emb.where(col("vec_id") % mod =!= 0)
       val batch = emb.where(col("vec_id") % mod === 0)
-      GraphAnn.writeIndex(base, hubs, path, m = 4, dim = Some(dim),
+      GraphAnn.writeIndex(base, hubs, path, m = 4,
         hubDegree = 16)
       GraphAnn.appendToIndex(batch, emb, hubs, path, batchId = "b1",
-        m = 4, dim = Some(dim), hubDegree = 16)
+        m = 4, hubDegree = 16)
       val dead = emb.where(col("vec_id") % 7 === 3).select("vec_id")
       val deadIds = dead.collect().map(_.getLong(0)).toSet
       GraphAnn.tombstoneIndex(dead, path, batchId = "t1")

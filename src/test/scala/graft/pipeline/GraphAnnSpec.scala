@@ -1,8 +1,12 @@
 package graft.pipeline
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.SparkSpec
+import graft.operators.SessionCache
 
 /** [[GraphAnn]] — the navigable-small-world graph index: build
   * invariants (degree caps, symmetry, hub connectivity), beam-search
@@ -41,7 +45,7 @@ class GraphAnnSpec extends SparkSpec {
   test("edge table invariants: per-src knn degree <= 2m, hub degree <= hubDegree, no self-edges") {
     val emb = corpus
     val edges = GraphAnn.buildEdges(emb, hubsOf(emb, 8), m = 4,
-      bits = 4, dim = Some(dim), hubDegree = 16)
+      hubDegree = 16)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     assert(edges.where(col("src") === col("dst")).count() === 0L)
     val knnDeg = edges.where(col("kind") === "knn")
@@ -70,7 +74,7 @@ class GraphAnnSpec extends SparkSpec {
     val truth = Similarity.bruteSearchAll(emb, queries, 10)
       .select(col("query_id"), col("vec_id"))
     val hubs = hubsOf(emb, 16)
-    val edges = GraphAnn.buildEdges(emb, hubs, dim = Some(dim))
+    val edges = GraphAnn.buildEdges(emb, hubs)
     val got = GraphAnn.searchAll(edges, hubs, queries, k = 10)
     val r = meanRecall(truth, got)
     assert(r >= 0.9, s"graph-ANN recall collapsed: $r")
@@ -87,7 +91,7 @@ class GraphAnnSpec extends SparkSpec {
       emb.where(col("vec_id") % 2 === 0), queries, 5)
       .select(col("query_id"), col("vec_id"))
     val hubs = hubsOf(emb, 16)
-    val edges = GraphAnn.buildEdges(emb, hubs, dim = Some(dim))
+    val edges = GraphAnn.buildEdges(emb, hubs)
     val got = GraphAnn.searchAll(edges, hubs, queries, k = 5, beam = 16,
       allowed = Some(allowed))
     assert(got.where(col("vec_id") % 2 =!= 0).count() === 0L,
@@ -115,7 +119,7 @@ class GraphAnnSpec extends SparkSpec {
       emb.where(col("vec_id") % 12 === 5), queries, 3)
       .select(col("query_id"), col("vec_id"))
     val hubs = hubsOf(emb, 16)
-    val edges = GraphAnn.buildEdges(emb, hubs, dim = Some(dim))
+    val edges = GraphAnn.buildEdges(emb, hubs)
     val got = GraphAnn.searchAllAcorn(edges, hubs, queries,
       allowed, k = 3, beam = 4, rounds = 3)
     assert(got.where(col("vec_id") % 12 =!= 5).count() === 0L,
@@ -139,7 +143,7 @@ class GraphAnnSpec extends SparkSpec {
       emb.where(col("vec_id") % 8 === 0), queries, 10)
       .select(col("query_id"), col("vec_id"))
     val hubs = Similarity.sampleCentroids(emb, 64, knownCount = Some(2000L))
-    val edges = GraphAnn.buildEdges(emb, hubs, dim = Some(64))
+    val edges = GraphAnn.buildEdges(emb, hubs)
     val got = GraphAnn.searchAllAcorn(edges, hubs, queries,
       allowed, k = 10, beam = 8, rounds = 3)
     val r = meanRecall(truth, got)
@@ -167,7 +171,7 @@ class GraphAnnSpec extends SparkSpec {
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
     val allowed = emb.where(col("vec_id") % 8 === 0).select(col("vec_id"))
     val hubs = hubsOf(emb, 16)
-    val edges = GraphAnn.buildEdges(emb, hubs, dim = Some(dim))
+    val edges = GraphAnn.buildEdges(emb, hubs)
     val auto = GraphAnn.searchAllAcornAuto(edges, hubs, queries, allowed,
       k = 5, corpusSize = Some(emb.count()))
     val explicitBeam = GraphAnn.searchAllAcorn(edges, hubs, queries,
@@ -177,6 +181,50 @@ class GraphAnnSpec extends SparkSpec {
       "auto path must equal the explicit wide-beam search")
   }
 
+  /** Stages run while `body` runs. */
+  private def stagesDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    ColumnBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(l)
+    try { body; ColumnBridge.drainListeners(spark) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  test("a search runs an uncut buildEdges frame's stages once, not once per round") {
+    val emb = corpus
+    val queries = emb.where(col("vec_id") % 37 === 0)
+      .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
+    val allowed = emb.where(col("vec_id") % 2 === 0).select(col("vec_id"))
+    val hubs = hubsOf(emb, 16)
+    val uncut = GraphAnn.buildEdges(emb, hubs)
+    val built = SessionCache.cut(uncut, eager = true)
+    val searches: Seq[(String, (DataFrame, Int) => DataFrame)] = Seq(
+      "route-all" -> ((e, r) =>
+        GraphAnn.searchAll(e, hubs, queries, k = 5, rounds = r)),
+      "ACORN" -> ((e, r) =>
+        GraphAnn.searchAllAcorn(e, hubs, queries, allowed, k = 5, rounds = r)))
+    for ((name, search) <- searches) {
+      // the build's share of an r-round search: its stages over the
+      // uncut frame minus the same search over the built edges
+      def buildStages(r: Int): Int =
+        stagesDuring { search(uncut, r).collect(); () } -
+          stagesDuring { search(built, r).collect(); () }
+      val once = buildStages(1)
+      assert(once > 0, s"$name: the uncut search ran no build stages")
+      assert(buildStages(3) === once,
+        s"$name: extra rounds re-ran the edge build")
+    }
+    intercept[IllegalArgumentException] {
+      GraphAnn.searchAll(uncut, hubs, queries, k = 5, rounds = 0)
+    }
+  }
+
   test("sub-bucketed build: identical edges when no bucket exceeds the target; recall holds when hot buckets split") {
     val emb = graft.RecallCurve.clusteredCorpus(spark, n = 2000, dim = 64,
       clusters = 40)
@@ -184,18 +232,18 @@ class GraphAnnSpec extends SparkSpec {
     val hubs = Similarity.sampleCentroids(emb, 64, knownCount = Some(2000L))
     // a target no bucket reaches → the refined mask never widens and
     // the edge table is bit-identical to the unsplit construction
-    val plain = GraphAnn.buildEdges(emb, hubs, dim = Some(64))
+    val plain = GraphAnn.buildEdges(emb, hubs)
       .collect().map(_.toSeq).toSet
-    val noop = GraphAnn.buildEdges(emb, hubs, dim = Some(64),
+    val noop = GraphAnn.buildEdges(emb, hubs,
       splitBucket = Some(1000000L)).collect().map(_.toSeq).toSet
     assert(noop === plain, "inactive split must not perturb the build")
 
     // an aggressive target forces real sub-bucketing (2000 vectors /
     // 16 coarse buckets ≈ 125 per bucket >> 32) — the pair mass drops
     // but search recall at production defaults must hold
-    val split = GraphAnn.buildEdges(emb, hubs, dim = Some(64),
+    val split = GraphAnn.buildEdges(emb, hubs,
       splitBucket = Some(32L))
-    assert(split.count() < GraphAnn.buildEdges(emb, hubs, dim = Some(64))
+    assert(split.count() < GraphAnn.buildEdges(emb, hubs)
       .count() * 1.01, "split build must not inflate the edge table")
     val queries = emb.where(col("vec_id") % 311 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
@@ -220,15 +268,15 @@ class GraphAnnSpec extends SparkSpec {
     val hubs = Similarity.sampleCentroids(emb, 64, knownCount = Some(2000L))
     val path = java.nio.file.Files
       .createTempDirectory("graft-nsw-default").toString + "/idx"
-    GraphAnn.writeIndex(emb, hubs, path, dim = Some(64)) // defaults only
+    GraphAnn.writeIndex(emb, hubs, path) // defaults only
     val got = GraphAnn.readEdges(spark, path)
       .collect().map(_.toSeq).toSet
-    val split = GraphAnn.buildEdges(emb, hubs, dim = Some(64),
+    val split = GraphAnn.buildEdges(emb, hubs,
       splitBucket = GraphAnn.productionSplit())
       .collect().map(_.toSeq).toSet
     assert(got === split,
       "default writeIndex must build the productionSplit construction")
-    val unsplit = GraphAnn.buildEdges(emb, hubs, dim = Some(64))
+    val unsplit = GraphAnn.buildEdges(emb, hubs)
       .collect().map(_.toSeq).toSet
     assert(got !== unsplit,
       "fixture too sparse to distinguish the default from the unsplit build")
@@ -251,15 +299,15 @@ class GraphAnnSpec extends SparkSpec {
     def appendWith(split: Option[Long], tag: String): Set[Seq[Any]] = {
       val path = java.nio.file.Files
         .createTempDirectory(s"graft-nsw-app-$tag").toString + "/idx"
-      GraphAnn.writeIndex(base, hubs, path, dim = Some(64),
+      GraphAnn.writeIndex(base, hubs, path,
         splitBucket = None)
       split match {
         case Some(GraphAnn.AutoSplit) =>
-          GraphAnn.appendToIndex(batch, emb, hubs, path, batchId = "b1",
-            dim = Some(64)) // defaults only — the pin under test
+          // defaults only — the pin under test
+          GraphAnn.appendToIndex(batch, emb, hubs, path, batchId = "b1")
         case s =>
           GraphAnn.appendToIndex(batch, emb, hubs, path, batchId = "b1",
-            dim = Some(64), splitBucket = s)
+            splitBucket = s)
       }
       spark.read.parquet(s"$path/batch=b1").collect().map(_.toSeq).toSet
     }
@@ -273,9 +321,8 @@ class GraphAnnSpec extends SparkSpec {
     // appended nodes remain findable through the default-built edges
     val path = java.nio.file.Files
       .createTempDirectory("graft-nsw-app-srch").toString + "/idx"
-    GraphAnn.writeIndex(base, hubs, path, dim = Some(64), splitBucket = None)
-    GraphAnn.appendToIndex(batch, emb, hubs, path, batchId = "b1",
-      dim = Some(64))
+    GraphAnn.writeIndex(base, hubs, path, splitBucket = None)
+    GraphAnn.appendToIndex(batch, emb, hubs, path, batchId = "b1")
     val queries = emb.where(col("vec_id") % 311 === 0)
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
     val got = GraphAnn.searchAll(GraphAnn.readEdges(spark, path), hubs,
@@ -297,7 +344,7 @@ class GraphAnnSpec extends SparkSpec {
     val truth = Similarity.bruteSearchAll(emb, queries, 10)
       .select(col("query_id"), col("vec_id"))
     val hubs = Similarity.sampleCentroids(emb, 64, knownCount = Some(2000L))
-    val edges = GraphAnn.buildEdges(emb, hubs, dim = Some(64))
+    val edges = GraphAnn.buildEdges(emb, hubs)
     val got = GraphAnn.searchAll(edges, hubs, queries, k = 10)
     val r = meanRecall(truth, got)
     assert(r >= 0.9, s"graph-ANN recall at production defaults collapsed: $r")
@@ -313,9 +360,9 @@ class GraphAnnSpec extends SparkSpec {
       .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
 
     // write: the indexed read answers exactly like the direct build
-    GraphAnn.writeIndex(emb, hubs, path, dim = Some(dim))
+    GraphAnn.writeIndex(emb, hubs, path)
     val direct = GraphAnn.searchAll(
-      GraphAnn.buildEdges(emb, hubs, dim = Some(dim)), hubs, queries, k = 10)
+      GraphAnn.buildEdges(emb, hubs), hubs, queries, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     val indexed = GraphAnn.searchAll(
       GraphAnn.readEdges(spark, path), hubs, queries, k = 10)
@@ -326,9 +373,8 @@ class GraphAnnSpec extends SparkSpec {
     // in; odd nodes must be findable afterwards
     val even = emb.where(col("vec_id") % 2 === 0)
     val odd = emb.where(col("vec_id") % 2 === 1)
-    GraphAnn.writeIndex(even, hubs, path, dim = Some(dim))
-    GraphAnn.appendToIndex(odd, emb, hubs, path, batchId = "b1",
-      dim = Some(dim))
+    GraphAnn.writeIndex(even, hubs, path)
+    GraphAnn.appendToIndex(odd, emb, hubs, path, batchId = "b1")
     val afterAppend = GraphAnn.searchAll(
       GraphAnn.readEdges(spark, path), hubs, queries, k = 10)
     assert(afterAppend.where(col("vec_id") % 2 === 1).count() > 0,
