@@ -118,10 +118,6 @@ final class Pipeline(spark: SparkSession, warehouse: String) {
     import spark.implicits._
     silver.drop("modifiers").as[graft.schema.SilverAuction]
   }
-  def dimsDs: org.apache.spark.sql.Dataset[graft.schema.ItemDim] = {
-    import spark.implicits._
-    dims.as[graft.schema.ItemDim]
-  }
 
   /** E1 step 1 — land a raw snapshot document into bronze (S2). The
     * document comes from the S1 REST edge or a fixture; ingestion is

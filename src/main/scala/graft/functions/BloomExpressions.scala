@@ -268,10 +268,12 @@ object BloomFunctions {
   }
 
   /** Crash-safe artifact persist: write to a sibling tmp dir, then
-    * swap via renames (the [[graft.Pipeline]] overwriteAtomically
-    * discipline). A plain `mode("overwrite")` is delete-then-write: a
-    * crash in the hole destroys the only copy of an artifact whose
-    * entire point is never rebuilding it from the corpus.
+    * swap via renames (the two-rename swap of [[graft.Pipeline]]
+    * overwriteAtomically and [[graft.sources.BatchTable.compact]], here
+    * through local `java.nio` calls only). A plain `mode("overwrite")`
+    * is delete-then-write: a crash in the hole destroys the only copy
+    * of an artifact whose entire point is never rebuilding it from the
+    * corpus.
     */
   private def writeArtifactAtomically(
       df: org.apache.spark.sql.DataFrame, path: String): Unit = {

@@ -526,162 +526,50 @@ object Dedup {
       .select(col("doc_id"), sig.as("simhash"))
   }
 
-  /** Single-column SimHash expression (interpreted fold; prefer
-    * [[simHashSignatures]] for corpus-scale use — same result,
-    * including the token-less case: a doc with zero tokens has no
-    * signature row there, so this yields NULL rather than an all-zero
-    * signature that would sit at hamming 0 from every other empty
-    * doc).
-    */
-  def simHash64(text: Column): Column = {
-    val toks = TextAnalysis.tokens(text)
-    val tokenHashes = transform(toks, t => simHash60(t))
-    val bits = (0 until SimHashBits).map { b =>
-      val votes = aggregate(
-        tokenHashes,
-        lit(0L),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(votes > 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    when(size(toks) >= 1, bits.reduce(_.bitwiseOR(_)))
-  }
-
-  /** Near-dup pairs by SimHash hamming distance <= maxHamming.
-    * Candidate generation: band the 64-bit signature into four
-    * 16-bit chunks — pairs within hamming <= 3 must share >= 1 exact
-    * chunk (pigeonhole), so the join is on chunk equality, not a
-    * cross product.
-    */
   /** Materialize an LSH dedup INDEX of a corpus: its band-bucket
     * table and its shingle table, written as parquet artifacts — the
     * MinHash analog of [[graft.pipeline.Similarity.writeIvfIndex]].
     * Incremental ingest then dedups each NEW batch against the index
-    * ([[nearDupsAgainstIndex]]) and appends the batch's own rows
-    * ([[appendToLshIndex]]) — the corpus is shingled and signed
-    * exactly ONCE, ever; daily dedup cost scales with the batch, not
-    * the corpus.
+    * ([[nearDupsAgainstIndex]]) and appends the batch's own bands and
+    * shingles under a new `batchId` ([[lshIndex]]'s `write`) — the
+    * corpus is shingled and signed exactly ONCE, ever; daily dedup
+    * cost scales with the batch, not the corpus.
     *
-    * Every write lands under a `batch=<batchId>` subdirectory, so a
-    * RETRIED write (at-least-once orchestration, or a crash between
-    * the bands and shingles writes) OVERWRITES its own batch rather
-    * than doubling rows — a doubled shingle table would double
-    * set_size and silently deflate every verified jaccard below
-    * threshold, admitting duplicates.
+    * The index is a [[graft.sources.BatchTable]] ([[lshIndex]]): every
+    * write lands under a `batch=<batchId>` subdirectory, so a RETRIED
+    * write (at-least-once orchestration, or a crash between the bands
+    * and shingles writes) OVERWRITES its own batch rather than
+    * doubling rows — a doubled shingle table would double set_size and
+    * silently deflate every verified jaccard below threshold, admitting
+    * duplicates. A fresh index first clears the whole index and its
+    * tombstones: stale files from a previous run (or layout) would
+    * otherwise pollute every read.
+    *
+    * Retention evicts documents through [[lshIndex]]'s tombstone set
+    * (`tombstone(removed, batchId)`, the `removed` rows of
+    * [[Snapshots.diff]]): a deleted doc must stop claiming near-dup
+    * verdicts against new batches, or a doc deleted for policy reasons
+    * would keep suppressing its re-crawled twin. Its `compact` folds
+    * both tables' batches into one and drops the evicted rows.
     */
   def writeLshIndex(docs: DataFrame, path: String, n: Int = 3,
       numHashes: Int = 16, rowsPerBand: Int = 4,
       batchId: String = "base"): Unit = {
-    // a FRESH index replaces the whole band/shingle tables, not just
-    // its own batch subdir — stale files from a previous run (or a
-    // previous layout) would otherwise silently pollute every
-    // subsequent read
-    val hconf = docs.sparkSession.sparkContext.hadoopConfiguration
-    Seq(s"$path/bands", s"$path/shingles", lshTombstonePath(path)).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    writeIndexBatch(docs, path, n, numHashes, rowsPerBand, batchId)
-  }
-
-  /** Tombstone table of an LSH index: ids EVICTED from dedup duty.
-    * A plain-named sibling of `bands`/`shingles` under the index root
-    * — safe because every reader addresses the sub-tables explicitly,
-    * never the root. (NOT dot-prefixed: Spark's path listing filters
-    * hidden names even when given as the read root.)
-    */
-  private def lshTombstonePath(path: String) = s"$path/tombstones"
-
-  /** EVICT documents from an LSH index — the retention counterpart of
-    * [[appendToLshIndex]]. A corpus under a retention policy (the
-    * 30-day crawl window) DELETES documents too; without eviction the
-    * index keeps their bands + shingles forever and dead docs go on
-    * claiming near-dup verdicts against every new batch — a doc
-    * deleted for policy reasons would silently keep suppressing its
-    * re-crawled twin.
-    *
-    * Deletion is LOGICAL first, physical later: the removed ids (the
-    * `removed` status rows of [[Snapshots.diff]] — id-grain, tiny
-    * next to the corpus) land under `batch=<batchId>` in the index's
-    * tombstone table; every reader anti-joins them out
-    * ([[nearDupsAgainstIndex]]), and the next [[compactLshIndex]]
-    * drops the rows physically and clears the tombstones. Daily
-    * eviction cost is therefore O(removed ids) — no corpus-sized
-    * index rewrite on the retention fast path. Re-running a batchId
-    * is idempotent (directory overwrite), matching the append side.
-    */
-  def tombstoneLshIndex(removedIds: DataFrame, path: String,
-      batchId: String, idCol: String = "doc_id"): Unit =
-    removedIds.select(col(idCol).as("doc_id")).distinct()
-      .write.mode("overwrite").parquet(s"${lshTombstonePath(path)}/batch=$batchId")
-
-  /** Subtract the index's tombstoned ids from one of its tables — a
-    * left-anti on the id-grain removed set (AQE broadcasts the
-    * typical small set; a huge backlog means compaction is overdue).
-    */
-  private def withoutLshTombstones(df: DataFrame, path: String): DataFrame = {
-    val spark = df.sparkSession
-    val tp = new org.apache.hadoop.fs.Path(lshTombstonePath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tp)) df
-    else df.join(
-      spark.read.parquet(lshTombstonePath(path)).select("doc_id").distinct(),
-      Seq("doc_id"), "left_anti")
-  }
-
-  /** Add a (deduplicated) batch into an existing index — the daily
-    * maintenance step after [[nearDupsAgainstIndex]]. Re-running the
-    * same batchId is idempotent (directory overwrite); the rest of
-    * the index is untouched.
-    */
-  def appendToLshIndex(docs: DataFrame, path: String, batchId: String,
-      n: Int = 3, numHashes: Int = 16, rowsPerBand: Int = 4): Unit =
-    writeIndexBatch(docs, path, n, numHashes, rowsPerBand, batchId)
-
-  /** Fold both index tables' accumulated `batch=` subdirs into one
-    * ([[IndexCompaction]] — periodic maintenance after many
-    * [[appendToLshIndex]] days). Row content is unchanged, so
-    * [[nearDupsAgainstIndex]] answers identically before and after;
-    * bands and shingles compact independently (content-preserving, so
-    * a crash between the two leaves a correct, partially-compacted
-    * index). Returns the number of batches merged per table (they
-    * match unless a previous compaction half-finished).
-    *
-    * Compaction also APPLIES any pending [[tombstoneLshIndex]]
-    * evictions: tombstoned rows are dropped from the rewrite and the
-    * tombstone table is cleared afterwards. Order makes a crash
-    * harmless at every point — a table compacted without its twin
-    * still has the tombstones on disk, so readers keep anti-joining
-    * them (double-subtracting an already-dropped id is a no-op), and
-    * a re-run finishes the job.
-    */
-  def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, intoBatchId: String = "compacted"): (Int, Int) = {
-    val tp = new org.apache.hadoop.fs.Path(lshTombstonePath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exclude =
-      if (fs.exists(tp))
-        Some(("doc_id",
-          spark.read.parquet(lshTombstonePath(path)).select("doc_id")))
-      else None
-    val merged =
-      (IndexCompaction.compact(spark, s"$path/bands", intoBatchId, Nil, exclude),
-        IndexCompaction.compact(spark, s"$path/shingles", intoBatchId, Nil, exclude))
-    // tombstones are now physically applied (or there was no index to
-    // apply them to) — clear them LAST so any earlier crash leaves
-    // the logical deletion in force
-    if (fs.exists(tp)) fs.delete(tp, true)
-    merged
-  }
-
-  private def writeIndexBatch(docs: DataFrame, path: String, n: Int,
-      numHashes: Int, rowsPerBand: Int, batchId: String): Unit = {
+    val index = lshIndex(path)
+    index.fresh(docs.sparkSession)
     graft.operators.SessionCache.scoped(wordShingles(docs, n)) { shingled =>
-      bandBuckets(minHashSignatures(shingled, numHashes), numHashes, rowsPerBand)
-        .write.mode("overwrite").parquet(s"$path/bands/batch=$batchId")
-      shingled.write.mode("overwrite").parquet(s"$path/shingles/batch=$batchId")
+      index.write(bandBuckets(minHashSignatures(shingled, numHashes),
+        numHashes, rowsPerBand), batchId, "bands")
+      index.write(shingled, batchId, "shingles")
     }
   }
+
+  /** The LSH index at `path` as a [[graft.sources.BatchTable]]: the
+    * `bands` and `shingles` tables share one tombstone set of evicted
+    * `doc_id`s.
+    */
+  def lshIndex(path: String): graft.sources.BatchTable =
+    graft.sources.BatchTable(path, "doc_id", Seq("bands", "shingles"))
 
   /** Near-dup pairs (doc_new, doc_old, jaccard) of a NEW batch
     * against a materialized [[writeLshIndex]] index — incremental
@@ -714,8 +602,8 @@ object Dedup {
     // cannot distort any surviving pair's jaccard). Filtering the
     // corpus-sized shingles table too would add a second anti-join on
     // the per-batch hot path for zero semantic effect.
-    val idxBands = withoutLshTombstones(
-      spark.read.parquet(s"$indexPath/bands"), indexPath)
+    val idxBands = lshIndex(indexPath).live(
+      spark.read.parquet(s"$indexPath/bands"))
     val candidates = newBands
       .select(col("doc_id").as("doc_new"), col("band"), col("bucket"))
       .join(idxBands.select(col("doc_id").as("doc_old"), col("band"), col("bucket")),
@@ -743,6 +631,12 @@ object Dedup {
       .select("doc_new", "doc_old", "jaccard")
   }
 
+  /** Near-dup pairs by SimHash hamming distance <= maxHamming.
+    * Candidate generation: band the 64-bit signature into four
+    * 16-bit chunks — pairs within hamming <= 3 must share >= 1 exact
+    * chunk (pigeonhole), so the join is on chunk equality, not a
+    * cross product.
+    */
   def simHashNearDups(df: DataFrame, maxHamming: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame =
     hammingNearDups(simHashSignatures(df, textCol, idCol), maxHamming,

@@ -62,12 +62,13 @@ import graft.operators.SessionCache
   * tombstone-filtered [[readEdges]]) costs one build per search, not
   * one per round, and callers need not pre-materialize it.
   *
-  * Index lifecycle mirrors the IVF/LSH indexes: [[writeIndex]]
-  * lands edges under `batch=<id>` (idempotent overwrite per batch),
-  * [[appendToIndex]] links a new embedding batch in (new-node edges
-  * + reverse links from existing nodes, cost ∝ batch),
-  * [[tombstoneIndex]] evicts ids logically (readers drop edges
-  * touching them), [[compactIndex]] folds batches, applies
+  * Index lifecycle is the IVF/LSH one, through [[index]]'s
+  * [[graft.sources.BatchTable]]: [[writeIndex]] lands edges under
+  * `batch=<id>` (idempotent overwrite per batch), [[appendToIndex]]
+  * links a new embedding batch in (new-node edges + reverse links
+  * from existing nodes, cost ∝ batch), the index's `tombstone` evicts
+  * ids logically (readers drop edges touching them),
+  * [[compactIndex]] folds batches, applies
   * tombstones physically and re-caps per-(src, kind) degree — the
   * append path accretes reverse links past `m`, and compaction is
   * where the degree invariant is restored.
@@ -655,8 +656,6 @@ object GraphAnn {
     if (row.isNullAt(0)) 0L else row.getLong(0) // no shared buckets
   }
 
-  private def tombstonePath(path: String) = s"${path}_tombstones"
-
   /** The production sub-bucket target (round-17, verdict ask #2):
     * ~8×m keeps each refined bucket a few beam-widths deep — small
     * enough that per-bucket pair mass stays ~target×n (measured
@@ -676,7 +675,7 @@ object GraphAnn {
 
   /** Materialize the graph index: edges under `batch=<batchId>`.
     * A fresh index clears the path and any stale tombstones first
-    * (the [[Similarity.writeIvfIndex]] discipline).
+    * ([[index]]'s `fresh`).
     *
     * `splitBucket` DEFAULTS to the scale-safe [[productionSplit]]
     * (round-17, verdict ask #2): a production caller gets the
@@ -693,14 +692,8 @@ object GraphAnn {
       path: String, m: Int = DefaultM, hubDegree: Int = DefaultHubDegree,
       batchId: String = "base",
       splitBucket: Option[Long] = Some(AutoSplit)): Unit = {
-    val hconf = emb.sparkSession.sparkContext.hadoopConfiguration
-    Seq(path, tombstonePath(path)).foreach { dpath =>
-      val p = new org.apache.hadoop.fs.Path(dpath)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    buildEdges(emb, hubs, m, hubDegree, splitBucket)
-      .write.mode("overwrite").parquet(s"$path/batch=$batchId")
+    index(path).fresh(emb.sparkSession)
+    index(path).write(buildEdges(emb, hubs, m, hubDegree, splitBucket), batchId)
   }
 
   /** Link a new embedding batch into an existing index WITHOUT
@@ -736,40 +729,23 @@ object GraphAnn {
       m: Int = DefaultM, hubDegree: Int = DefaultHubDegree,
       splitBucket: Option[Long] = Some(AutoSplit)): Unit = {
     val (knn, hub) = linkEdges(batch, corpus, hubs, m, hubDegree, splitBucket)
-    knn.unionByName(hub)
-      .write.mode("overwrite").parquet(s"$path/batch=$batchId")
+    index(path).write(knn.unionByName(hub), batchId)
   }
 
-  /** Logical eviction: ids written under the sibling tombstone table;
-    * [[readEdges]] drops every edge touching them. Physical removal
-    * happens at [[compactIndex]]. Idempotent per batchId.
+  /** The graph index at `path` as a [[graft.sources.BatchTable]]. Its
+    * tombstone set holds evicted `vec_id`s, and a tombstoned id drops
+    * every edge it is an endpoint of, on BOTH ends: an evicted vector
+    * must neither rank nor route. [[readEdges]] drops them logically;
+    * [[compactIndex]] physically.
     */
-  def tombstoneIndex(removedIds: DataFrame, path: String, batchId: String): Unit =
-    removedIds.select(col(IdCol)).distinct()
-      .write.mode("overwrite").parquet(s"${tombstonePath(path)}/batch=$batchId")
-
-  /** `edges` without the edges touching an id tombstoned under
-    * `path`, on BOTH endpoints (an evicted vector must neither rank
-    * nor route); `edges` itself when nothing is tombstoned.
-    */
-  private def dropTombstoned(spark: SparkSession, path: String,
-      edges: DataFrame): DataFrame = {
-    val tp = new org.apache.hadoop.fs.Path(tombstonePath(path))
-    if (!tp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tp))
-      edges
-    else {
-      val dead = spark.read.parquet(tombstonePath(path))
-        .select(col(IdCol).as("__dead")).distinct()
-      edges.join(broadcast(dead), col("src") === col("__dead"), "left_anti")
-        .join(broadcast(dead), col("dst") === col("__dead"), "left_anti")
-    }
-  }
+  def index(path: String): graft.sources.BatchTable =
+    graft.sources.BatchTable(path, IdCol, dropIf = Seq("src", "dst"))
 
   /** The index's live edge set: batches unioned, tombstoned ids
     * excluded.
     */
   def readEdges(spark: SparkSession, path: String): DataFrame =
-    dropTombstoned(spark, path, spark.read.parquet(path)
+    index(path).live(spark.read.parquet(path)
       .select(col("src"), col("dst"), col("dst_vec"), col("cosine"), col("kind")))
 
   /** Fold `batch=` dirs into one (`batch=compacted`), apply tombstones
@@ -781,19 +757,12 @@ object GraphAnn {
       m: Int = DefaultM, hubDegree: Int = DefaultHubDegree): Int = {
     val w = Window.partitionBy(col("src"), col("kind"))
       .orderBy(col("cosine").desc, col("dst").asc)
-    def recap(df: DataFrame): DataFrame =
-      dropTombstoned(spark, path, df)
-        .groupBy(col("src"), col("dst"), col("kind"))
-        .agg(first(col("dst_vec")).as("dst_vec"), max(col("cosine")).as("cosine"))
-        .withColumn("__r", row_number().over(w))
-        .where(col("__r") <= when(col("kind") === "hub", hubDegree)
-          .otherwise(lit(2 * m)))
-        .select(col("src"), col("dst"), col("dst_vec"), col("cosine"), col("kind"))
-    val merged = IndexCompaction.compact(spark, path, "compacted", Nil,
-      None, recap)
-    val tp = new org.apache.hadoop.fs.Path(tombstonePath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tp)) fs.delete(tp, true)
-    merged
+    index(path).compact(spark, _.groupBy(col("src"), col("dst"), col("kind"))
+      .agg(first(col("dst_vec")).as("dst_vec"), max(col("cosine")).as("cosine"))
+      .withColumn("__r", row_number().over(w))
+      .where(col("__r") <= when(col("kind") === "hub", hubDegree)
+        .otherwise(lit(2 * m)))
+      .select(col("src"), col("dst"), col("dst_vec"), col("cosine"), col("kind")))
+      .head
   }
 }

@@ -65,21 +65,6 @@ object Repetition {
         col("t.gram").as("top_gram"),
         (-col("t.neg_cnt") * length(col("t.gram"))).as("top_chars"))
 
-  /** Per-doc total characters covered by word n-grams occurring ≥2
-    * times: (doc_id, dup_gram_chars = Σ cnt·len(gram) over duplicated
-    * grams). Sliding windows overlap, so the sum can exceed the doc
-    * length — callers clamp the fraction at 1 (as Gopher does).
-    */
-  def dupNGramChars(df: DataFrame, n: Int, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    df.select(col(idCol).as("doc_id"),
-        explode(graft.functions.NGramFunctions.wordNGrams(
-          TextAnalysis.tokens(col(textCol)), n)).as("gram"))
-      .groupBy("doc_id", "gram").agg(count(lit(1)).as("cnt"))
-      .groupBy("doc_id").agg(
-        sum(when(col("cnt") >= 2, col("cnt") * length(col("gram")))
-          .otherwise(0L)).as("dup_gram_chars"))
-
   /** The assembled per-doc repetition signal vector:
     *
     *  - dup_line_fraction       = n_dup_lines / n_lines

@@ -436,27 +436,21 @@ object Similarity {
     * ([[sampleCentroids]] / [[kmeansCentroids]]), write once, serve
     * many queries against the same index + centroid list.
     *
-    * Layout mirrors [[graft.pipeline.Dedup.writeLshIndex]]: every
-    * write lands under a `batch=<batchId>` subdirectory so
-    * incremental ingest ([[appendToIvfIndex]]) adds new embeddings
-    * without rewriting the corpus, and a RETRIED write (at-least-once
-    * orchestration) overwrites its own batch rather than doubling
-    * rows — doubled rows would surface as duplicate ids in every
-    * top-k. A fresh index CLEARS the whole path first: stale files
-    * from a previous run (or the previous flat layout) would
-    * otherwise silently pollute every read.
+    * The index is a [[graft.sources.BatchTable]] ([[ivfIndex]]), like
+    * [[graft.pipeline.Dedup.writeLshIndex]]'s: every write lands under
+    * a `batch=<batchId>` subdirectory so incremental ingest
+    * ([[appendToIvfIndex]]) adds new embeddings without rewriting the
+    * corpus, and a RETRIED write (at-least-once orchestration)
+    * overwrites its own batch rather than doubling rows — doubled rows
+    * would surface as duplicate ids in every top-k. A fresh index
+    * CLEARS the whole index and its tombstones first: stale files from
+    * a previous run would otherwise silently pollute every read, and a
+    * rebuilt index re-admits every row it is built from.
     */
   def writeIvfIndex(emb: DataFrame, centroids: Array[(Long, Array[Float])],
       path: String, vecCol: String = "embedding",
       batchId: String = "base"): Unit = {
-    val hconf = emb.sparkSession.sparkContext.hadoopConfiguration
-    // clear stale tombstones too — a rebuilt index re-admits every doc
-    // it was built from; an inherited eviction would shadow re-added rows
-    Seq(path, ivfTombstonePath(path)).foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    ivfIndex(path).fresh(emb.sparkSession)
     writeIvfBatch(emb, centroids, path, vecCol, batchId)
   }
 
@@ -481,72 +475,20 @@ object Similarity {
       path: String, batchId: String, vecCol: String = "embedding"): Unit =
     writeIvfBatch(emb, centroids, path, vecCol, batchId)
 
-  /** Tombstone table of an IVF index: a plain-named SIBLING of the
-    * index root (`<path>_tombstones`) — the root itself is the
-    * cell-partitioned table every reader lists, so a foreign
-    * subdirectory inside it would break `batch=`/`__cell=` partition
-    * discovery, and a dot-prefixed one is unreadable (Spark's path
-    * listing filters hidden names even as the read root).
+  /** The IVF index at `path` as a [[graft.sources.BatchTable]]
+    * partitioned by `__cell`, with a tombstone set of evicted
+    * `vec_id`s. Retention EVICTS vectors through it
+    * (`tombstone(removed, batchId)`, the `removed` rows of
+    * [[Snapshots.diff]]): without eviction, deleted vectors keep
+    * surfacing in top-k results and keep claiming
+    * [[semDedupAgainstIndex]] verdicts forever. Its `compact` folds the
+    * appended batches into one and drops the evicted rows; rows keep
+    * their STORED cell assignment, so probes answer identically.
     */
-  private def ivfTombstonePath(path: String) = s"${path}_tombstones"
+  def ivfIndex(path: String): graft.sources.BatchTable =
+    graft.sources.BatchTable(path, IvfId, partitionCols = Seq("__cell"))
 
-  /** EVICT vectors from an IVF index — the retention counterpart of
-    * [[appendToIvfIndex]], mirroring
-    * [[graft.pipeline.Dedup.tombstoneLshIndex]]: a corpus under a
-    * retention window deletes rows too, and without eviction deleted
-    * vectors keep surfacing in top-k results and keep claiming
-    * [[semDedupAgainstIndex]] verdicts forever. Deletion is LOGICAL
-    * first (the removed-id set — [[Snapshots.diff]] `removed` rows,
-    * id-grain — lands under `batch=<batchId>` in the tombstone
-    * table; readers anti-join it), physical at the next
-    * [[compactIvfIndex]] (rows dropped in the rewrite, tombstones
-    * cleared). Daily eviction cost is O(removed ids), never a
-    * corpus-sized index rewrite. Idempotent per batchId.
-    */
-  def tombstoneIvfIndex(removedIds: DataFrame, path: String,
-      batchId: String, idCol: String = "vec_id"): Unit =
-    removedIds.select(col(idCol)).distinct()
-      .write.mode("overwrite").parquet(s"${ivfTombstonePath(path)}/batch=$batchId")
-
-  /** Subtract tombstoned ids from an index read (left-anti on the
-    * id-grain removed set; AQE broadcasts the typical small set).
-    */
-  private def withoutIvfTombstones(df: DataFrame, path: String,
-      idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val tp = new org.apache.hadoop.fs.Path(ivfTombstonePath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tp)) df
-    else df.join(
-      spark.read.parquet(ivfTombstonePath(path)).select(col(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-  }
-
-  /** Fold the index's accumulated `batch=` subdirs into one
-    * ([[IndexCompaction]] — the periodic maintenance step after many
-    * [[appendToIvfIndex]] days). Rows keep their STORED cell
-    * assignment: no re-scoring, so probes answer identically before
-    * and after; only the file layout changes (one subdir, one file
-    * set per cell). Returns the number of batches merged.
-    */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, intoBatchId: String = "compacted",
-      idCol: String = "vec_id"): Int = {
-    // Pending [[tombstoneIvfIndex]] evictions are APPLIED here: the
-    // tombstoned rows are dropped from the rewrite and the tombstone
-    // table cleared afterwards (cleared LAST, so a crash mid-compact
-    // leaves the logical deletion in force for readers).
-    val tp = new org.apache.hadoop.fs.Path(ivfTombstonePath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exclude =
-      if (fs.exists(tp))
-        Some((idCol, spark.read.parquet(ivfTombstonePath(path)).select(col(idCol))))
-      else None
-    val merged = IndexCompaction.compact(spark, path, intoBatchId,
-      Seq("__cell"), exclude)
-    if (fs.exists(tp)) fs.delete(tp, true)
-    merged
-  }
+  private val IvfId = "vec_id"
 
   /** Write one `batch=` subdir of the index. MALFORMED vectors
     * (length != the centroid dimensionality) are QUARANTINED to a
@@ -562,10 +504,9 @@ object Similarity {
       path: String, vecCol: String, batchId: String): Unit = {
     require(centroids.nonEmpty, "empty centroid list")
     val dim = centroids.head._2.length
-    assignCells(emb, centroids, vecCol)
-      .withColumn("__cell", when(size(col(vecCol)) === dim, col("__cell")))
-      .write.mode("overwrite").partitionBy("__cell")
-      .parquet(s"$path/batch=$batchId")
+    ivfIndex(path).write(assignCells(emb, centroids, vecCol)
+      .withColumn("__cell", when(size(col(vecCol)) === dim, col("__cell"))),
+      batchId)
   }
 
   /** Drift guard for an IVF index: one summary row of how well
@@ -625,7 +566,7 @@ object Similarity {
     * cells the probe no longer checks.
     *
     * Under retention, "full" means the SURVIVING corpus: pass the
-    * corpus with [[tombstoneIvfIndex]]'d rows already excluded. The
+    * corpus with the [[ivfIndex]] tombstoned rows already excluded. The
     * rebuild clears the tombstone table along with the old index
     * (writeIvfIndex — stale evictions must not shadow re-added docs),
     * so the rebuilt index serves exactly what you pass, nothing else;
@@ -655,8 +596,7 @@ object Similarity {
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
       centroids: Array[(Long, Array[Float])], queryVec: Array[Float],
-      k: Int, nprobe: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
+      k: Int, nprobe: Int, vecCol: String = "embedding",
       // FILTERED search: metadata predicate over the index rows,
       // applied to the probe scan itself — IVF's shortlist is exact
       // within probed cells, so pre-filtering candidates keeps that
@@ -672,11 +612,9 @@ object Similarity {
     // top-k, so a tombstoned vector can neither rank nor displace
     val probed = spark.read.parquet(path)
       .where(col("__cell").isin(probeCells: _*))
-    withoutIvfTombstones(
-      filter.foldLeft(probed)((df, f) => df.where(f)),
-      path, idCol)
-      .select(col(idCol), rankCosine(col(vecCol), qCol).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol).asc)
+    ivfIndex(path).live(filter.foldLeft(probed)((df, f) => df.where(f)))
+      .select(col(IvfId), rankCosine(col(vecCol), qCol).as("cosine"))
+      .orderBy(col("cosine").desc, col(IvfId).asc)
       .limit(k)
   }
 
@@ -1137,21 +1075,20 @@ object Similarity {
     * first, or append survivors to the index so the next batch sees
     * them — the composition [[appendToIvfIndex]] exists for.
     *
-    * Output: (idCol, cell, claimed_by, claim_cosine, keeper).
+    * Output: (vec_id, cell, claimed_by, claim_cosine, keeper).
     */
   def semDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, indexPath: String,
       centroids: Array[(Long, Array[Float])], eps: Double,
-      maxCellSize: Int = 100000,
-      idCol: String = "vec_id", vecCol: String = "embedding",
+      maxCellSize: Int = 100000, vecCol: String = "embedding",
       dim: Option[Int] = None): DataFrame = {
+    val idCol = IvfId
     val d = resolveDim(dim, batch, vecCol)
     val valid = batch.where(size(col(vecCol)) === d)
     val celled = assignCells(valid.select(col(idCol), col(vecCol)),
       centroids, vecCol, "cell")
-    val idx = withoutIvfTombstones(
-      spark.read.parquet(indexPath).where(col("__cell").isNotNull), indexPath,
-      idCol)
+    val idx = ivfIndex(indexPath)
+      .live(spark.read.parquet(indexPath).where(col("__cell").isNotNull))
       .select(col("__cell").as("cell"), col(idCol).as("__idx_id"),
         col(vecCol).as("__idx_vec"))
     val keepable = idx.groupBy("cell").agg(count(lit(1)).as("__n"))
@@ -1182,30 +1119,6 @@ object Similarity {
         lit(null).cast("bigint").as("claimed_by"),
         lit(null).cast("double").as("claim_cosine"), lit(true).as("keeper"))
     verdicts.unionByName(quarantined)
-  }
-
-  /** The cells [[semDedup]] excluded from pairing under the same
-    * parameters — (cell, population) for populations > maxCellSize,
-    * plus the malformed-vector quarantine count as cell NULL (the
-    * [[overflowBuckets]] observability contract: every silently-
-    * skipped unit of work is reportable next to the run; a skipped
-    * cell's members all self-keep, so an overflowing cell means the
-    * dedup UNDER-dropped, never that it lost data).
-    */
-  def semDedupOverflowCells(emb: DataFrame, nlist: Int,
-      maxCellSize: Int = 100000,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      dim: Option[Int] = None): DataFrame = {
-    val d = resolveDim(dim, emb, vecCol)
-    val valid = emb.where(size(col(vecCol)) === d)
-    val centroids = sampleCentroids(valid, nlist, idCol, vecCol)
-    val celled = assignCells(valid.select(col(idCol), col(vecCol)),
-      centroids, vecCol, "cell")
-      .select(col("cell"))
-      .unionByName(emb.where(size(col(vecCol)) =!= d)
-        .select(lit(null).cast("bigint").as("cell")))
-    celled.groupBy("cell").agg(count(lit(1)).as("population"))
-      .where(col("population") > maxCellSize || col("cell").isNull)
   }
 
   /** The buckets [[embeddingNearDups]] dropped under the same

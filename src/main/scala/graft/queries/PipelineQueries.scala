@@ -2140,19 +2140,13 @@ object PipelineQueries {
         GraphAnn.writeIndex(even, hubs, nswLifePath, splitBucket = None)
         GraphAnn.appendToIndex(odd, emb, hubs, nswLifePath,
           batchId = "b1", splitBucket = None)
-        GraphAnn.tombstoneIndex(
-          emb.where(col("vec_id") % 50 === 7).select("vec_id"),
-          nswLifePath, batchId = "t1")
+        val index = GraphAnn.index(nswLifePath)
+        index.tombstone(emb.where(col("vec_id") % 50 === 7), "t1")
         val folded = GraphAnn.compactIndex(s, nswLifePath)
         require(folded == 2, s"expected 2 batches folded, got $folded")
-        val root = new org.apache.hadoop.fs.Path(nswLifePath)
-        val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val dirs = fs.listStatus(root).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-        require(dirs.size == 1,
-          s"compaction left ${dirs.map(_.getPath.getName)}")
-        require(!fs.exists(new org.apache.hadoop.fs.Path(
-          nswLifePath + "_tombstones")),
+        val dirs = index.ids(s)
+        require(dirs.size == 1, s"compaction left $dirs")
+        require(index.dead(s).isEmpty,
           "tombstones not cleared after physical application")
         val queries = emb.where(col("vec_id") % 31 === 0)
           .select(col("vec_id").as("query_id"),
@@ -5473,7 +5467,7 @@ object PipelineQueries {
     // diff -> evict -> dedup: the even half of the corpus is indexed
     // (p19's artifact layout); a retention pass then drops every
     // (id % 10 == 0) doc from the corpus, Snapshots.diff derives the
-    // removed set, and tombstoneLshIndex evicts it from the index
+    // removed set, and the index's tombstone set evicts it
     // (id-grain logical delete — O(removed), no corpus rewrite; the
     // next compaction applies it physically, LshIndexSpec proves the
     // rebuild equivalence). The odd half dedups against the surviving
@@ -5490,7 +5484,7 @@ object PipelineQueries {
           evictLshIndexPath)
         val removed = Snapshots.diff(docs, cur)
           .where(col("status") === "removed")
-        Dedup.tombstoneLshIndex(removed, evictLshIndexPath, batchId = "ret1")
+        Dedup.lshIndex(evictLshIndexPath).tombstone(removed, "ret1")
         Dedup.nearDupsAgainstIndex(docs.where(col("doc_id") % 2 === 1),
           evictLshIndexPath, threshold = 0.8)
       },
@@ -5498,7 +5492,7 @@ object PipelineQueries {
 
     // IVF index eviction: p20's incremental construction (even half
     // as base, odd half appended) followed by a retention eviction of
-    // every (vec_id % 7 == 0) vector — tombstoneIvfIndex, the
+    // every (vec_id % 7 == 0) vector through the index's tombstones, the
     // embedding-space twin of p91's logical delete. The probe query
     // (vec 0 — itself evicted, so the cosine-1 self-hit must NOT
     // lead the result) answers from the surviving rows only, under
@@ -5515,9 +5509,8 @@ object PipelineQueries {
         Similarity.writeIvfIndex(base, centroids, evictIvfIndexPath)
         Similarity.appendToIvfIndex(batch, centroids, evictIvfIndexPath,
           batchId = "b1")
-        Similarity.tombstoneIvfIndex(
-          emb.where(col("vec_id") % 7 === 0).select("vec_id"),
-          evictIvfIndexPath, batchId = "ret1")
+        Similarity.ivfIndex(evictIvfIndexPath).tombstone(
+          emb.where(col("vec_id") % 7 === 0), "ret1")
         val qVec = emb.where(col("vec_id") === 0L)
           .select("embedding").head().getSeq[Float](0).toArray
         Similarity.ivfTopKIndexed(s, evictIvfIndexPath, centroids, qVec,
@@ -5579,9 +5572,8 @@ object PipelineQueries {
             (col("doc_id") + 2000000L).as("doc_id"), col("text"),
             col("source")))
         val st = Snapshots.diff(docs, cur)
-        Dedup.tombstoneLshIndex(
-          st.where(col("status").isin("removed", "changed")),
-          incrIndexPath, batchId = "day1")
+        Dedup.lshIndex(incrIndexPath).tombstone(
+          st.where(col("status").isin("removed", "changed")), "day1")
         val batch = cur.join(
           st.where(col("status").isin("added", "changed")).select("doc_id"),
           Seq("doc_id"), "left_semi")

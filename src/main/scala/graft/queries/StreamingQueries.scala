@@ -847,9 +847,9 @@ object StreamingQueries {
     * global min. Flush-free (verdicts emit in the batch that folds
     * them), so every row — keepers AND drops — is gate-checked;
     * language-tagging the verdicts afterwards checks the composed
-    * [[graft.streaming.StreamingCuration.curateDeterministic]]
-    * projection on the same rows (langId is a stateless scan
-    * expression, identical plan either side of the sink).
+    * keeper-filtered, language-tagged projection on the same rows
+    * (langId is a stateless scan expression, identical plan either
+    * side of the sink).
     */
   private def streamingCurateDeterministic: QueryDef = QueryDef(
     "st10_streaming_curate",
@@ -1451,7 +1451,7 @@ object StreamingQueries {
   /** st19: ONLINE ingest dedup against an index with PENDING
     * EVICTIONS — st17's shape after a retention pass: the even-id
     * half is indexed, every (id % 10 == 0) doc is then tombstoned
-    * ([[graft.pipeline.Dedup.tombstoneLshIndex]] — the logical delete
+    * ([[graft.pipeline.Dedup.lshIndex]]'s tombstone — the logical delete
     * p91 gates in batch), and the odd half streams in two genuine
     * micro-batches. Every batch's verdicts must come from the
     * SURVIVING index only: a dead doc claiming a verdict in the
@@ -1470,9 +1470,8 @@ object StreamingQueries {
       val indexPath = s"$artifactRoot/lsh_index_st19"
       graft.pipeline.Dedup.writeLshIndex(
         docs.where(col("doc_id") % 2 === 0), indexPath)
-      graft.pipeline.Dedup.tombstoneLshIndex(
-        docs.where(col("doc_id") % 10 === 0).select("doc_id"),
-        indexPath, batchId = "ret1")
+      graft.pipeline.Dedup.lshIndex(indexPath).tombstone(
+        docs.where(col("doc_id") % 10 === 0), "ret1")
 
       val odd = docs.where(col("doc_id") % 2 === 1)
         .select(col("doc_id").cast("long"), col("text").cast("string"))
@@ -2076,9 +2075,8 @@ object StreamingQueries {
         val indexPath = s"$artifactRoot/lsh_index_st28"
         graft.pipeline.Dedup.writeLshIndex(
           docs.where(col("doc_id") % 2 === 0), indexPath)
-        graft.pipeline.Dedup.tombstoneLshIndex(
-          docs.where(col("doc_id") % 10 === 0).select("doc_id"),
-          indexPath, batchId = "ret1")
+        graft.pipeline.Dedup.lshIndex(indexPath).tombstone(
+          docs.where(col("doc_id") % 10 === 0), "ret1")
         val lm = graft.streaming.StreamingPerplexity.frozenLm(
           docs.select(col("doc_id").cast("long"), col("text").cast("string")))
         val clf = graft.pipeline.Classifier.trainLogReg(docs,
@@ -2416,7 +2414,7 @@ object StreamingQueries {
     * replayed as THREE micro-batches of per-group partials, then
     * [[graft.streaming.StreamingMvMaintenance.compact]] folds the
     * three `batch=` partial sets into ONE (schema-driven
-    * re-aggregation behind [[graft.pipeline.IndexCompaction]]'s
+    * re-aggregation behind [[graft.sources.BatchTable.compact]]'s
     * write-aside + directory-swap discipline), the compacted rollup
     * re-registers, and the p116 query must still navigate — gate
     * requires exactly one batch directory to remain, the rewrite to
@@ -2449,12 +2447,9 @@ object StreamingQueries {
 
       val folded = graft.streaming.StreamingMvMaintenance.compact(s, mvPath)
       require(folded == 3, s"expected to fold 3 maintained batches, got $folded")
-      val remaining = new org.apache.hadoop.fs.Path(mvPath)
-      val fs = remaining.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val dirs = fs.listStatus(remaining).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
+      val dirs = graft.sources.BatchTable(mvPath).ids(s)
       require(dirs.size == 1,
-        s"compaction left ${dirs.size} batch dirs: ${dirs.map(_.getPath.getName)}")
+        s"compaction left ${dirs.size} batch dirs: $dirs")
 
       graft.plans.MaterializedAggregate.registerExisting(
         s, basePath, mvPath, Seq("l_returnflag", "l_linestatus"),
@@ -2964,9 +2959,8 @@ object StreamingQueries {
         .option("checkpointLocation", ckpt).startScoped(s)
       try q0.awaitTermination() finally q0.stop()
 
-      graft.pipeline.GraphAnn.tombstoneIndex(
-        emb.where(col("vec_id") % 50 === 7).select("vec_id"),
-        index, batchId = "t1")
+      graft.pipeline.GraphAnn.index(index).tombstone(
+        emb.where(col("vec_id") % 50 === 7), "t1")
       val folded = graft.pipeline.GraphAnn.compactIndex(s, index)
       require(folded == 2, s"expected 2 batches folded, got $folded")
       val queries = emb.where(col("vec_id") % 31 === 0)

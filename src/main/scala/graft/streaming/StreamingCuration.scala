@@ -71,8 +71,8 @@ object StreamingCuration {
     *
     * Every quality-passing row is emitted WITH its verdict (the
     * [[nearDupVerdictStream]] observability rule — drops stay
-    * auditable); [[curateDeterministic]] is the keeper-filtered,
-    * language-tagged composition matching [[curate]]'s shape. State =
+    * auditable); keeper-filtered and language-tagged
+    * ([[TextAnalysis.langId]]) it has [[curate]]'s shape. State =
     * one boolean per in-horizon fingerprint with an event-time
     * timeout, the same bound as [[curate]]'s internal store; across
     * batches the first-claimed fingerprint wins exactly as there.
@@ -111,23 +111,6 @@ object StreamingCuration {
           })
       .toDF()
   }
-
-  /** [[curate]] with the deterministic claimant: keeper-filtered
-    * [[curateVerdicts]], language-tagged. Same output contract as
-    * [[curate]] minus the quality-feature columns (the claimant
-    * projection carries doc_id/text/event-time through the state
-    * machine; re-derive features downstream if a sink wants them —
-    * they are stateless scan expressions).
-    */
-  def curateDeterministic(docs: DataFrame,
-      minQuality: Double = 0.5,
-      eventTimeCol: String = "ingested_at",
-      watermarkDelay: String = "1 day",
-      stateHorizonHours: Int = 24): DataFrame =
-    TextAnalysis.langId(
-      curateVerdicts(docs, minQuality, eventTimeCol, watermarkDelay,
-        stateHorizonHours)
-        .where(col("keeper")).drop("keeper"))
 
   /** One exploded (doc, band) observation / its claim verdict. */
   case class BandObs(doc_id: Long, text: String,

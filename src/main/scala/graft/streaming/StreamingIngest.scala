@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.pipeline.{Classifier, Dedup}
+import graft.sources.BatchTable
 
 /** The COMPOSED online ingest pipeline — the streaming twin of the
   * p109 batch recipe, chaining the individually-gated streaming
@@ -176,13 +177,12 @@ object StreamingIngest {
           (col("__dealt") % cfg.batchSize).as("slot"))
 
       // idempotent commits: this batch's own partitions, overwritten.
-      ranked.write.mode("overwrite").parquet(s"${cfg.outPath}/batch=$batchId")
+      BatchTable(cfg.outPath).write(ranked, batchId.toString)
       val newCounters = counters
         .unionByName(withBucket.groupBy(col("bucket"))
           .agg(count(lit(1)).as("dealt")))
         .groupBy(col("bucket")).agg(sum(col("dealt")).as("dealt"))
-      newCounters.write.mode("overwrite")
-        .parquet(s"${cfg.statePath}/batch=$batchId")
+      BatchTable(cfg.statePath).write(newCounters, batchId.toString)
     }
   }
 
@@ -192,24 +192,10 @@ object StreamingIngest {
     */
   private def latestState(spark: org.apache.spark.sql.SparkSession,
       statePath: String, batchId: Long): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (!fs.exists(root)) Nil
-      else fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .map(_.getPath.getName.stripPrefix("batch=").toLong)
-        .filter(_ < batchId)
-    if (prior.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("bucket",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dealt",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$statePath/batch=${prior.max}")
-      .select(col("bucket").cast("long"), col("dealt").cast("long"))
+    import spark.implicits._
+    BatchTable(statePath).latestBefore(spark, batchId)
+      .fold(Seq.empty[(Long, Long)].toDF("bucket", "dealt"))(
+        _.select(col("bucket").cast("long"), col("dealt").cast("long")))
   }
 
   /** The whole chain as one checkpointed writer: admission in the

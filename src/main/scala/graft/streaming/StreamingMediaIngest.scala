@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
+import graft.sources.BatchTable
+
 /** The COMPOSED online MEDIA ingest pipeline — the multimodal twin
   * of [[StreamingIngest]], chaining the media stages a production
   * vision-data crawler runs, per micro-batch:
@@ -80,23 +82,22 @@ object StreamingMediaIngest {
       "sum_rgb")
   }
 
-  private def latestCounters(spark: org.apache.spark.sql.SparkSession,
-      cfg: Config, beforeBatch: Long): DataFrame = {
+  /** Per-source admission counters as of the latest committed state
+    * strictly before `beforeBatch`; empty on the first batch.
+    */
+  private[streaming] def latestCounters(spark: org.apache.spark.sql.SparkSession,
+      statePath: String, beforeBatch: Long): DataFrame = {
     import spark.implicits._
-    val ids = BatchPartitions.priorIds(spark, cfg.statePath, beforeBatch)
-    if (ids.isEmpty)
-      Seq.empty[(String, Long)].toDF("source", "n_admitted")
-    else
-      spark.read.parquet(s"${cfg.statePath}/batch=${ids.max}")
+    BatchTable(statePath).latestBefore(spark, beforeBatch)
+      .getOrElse(Seq.empty[(String, Long)].toDF("source", "n_admitted"))
   }
 
-  private def indexedHashes(spark: org.apache.spark.sql.SparkSession,
-      cfg: Config, beforeBatch: Long): DataFrame = {
+  /** Content hashes every batch before `beforeBatch` indexed. */
+  private[streaming] def indexedHashes(spark: org.apache.spark.sql.SparkSession,
+      indexPath: String, beforeBatch: Long): DataFrame = {
     import spark.implicits._
-    val parts = BatchPartitions.priorIds(spark, cfg.indexPath, beforeBatch)
-      .map(id => s"${cfg.indexPath}/batch=$id")
-    if (parts.isEmpty) Seq.empty[String].toDF("pixel_md5")
-    else spark.read.parquet(parts: _*).select("pixel_md5")
+    BatchTable(indexPath).unionBefore(spark, beforeBatch)
+      .fold(Seq.empty[String].toDF("pixel_md5"))(_.select("pixel_md5"))
   }
 
   /** One micro-batch, replay-idempotent. */
@@ -108,7 +109,7 @@ object StreamingMediaIngest {
     graft.operators.SessionCache.scoped(signatures(batch)) { sigs =>
       // 1. admission: first-k per source by media_id, counters carried
       //    from the latest state snapshot before this batch
-      val prev = latestCounters(spark, cfg, batchId)
+      val prev = latestCounters(spark, cfg.statePath, batchId)
       val wAdm = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source")).orderBy(col("media_id"))
       val admitted = sigs
@@ -122,16 +123,16 @@ object StreamingMediaIngest {
       // carried count instead of resetting)
       val adds = admitted.groupBy(col("source"))
         .agg(sum(when(col("admitted"), 1L).otherwise(0L)).as("__add"))
-      prev.withColumnRenamed("n_admitted", "__prev")
+      val counters = prev.withColumnRenamed("n_admitted", "__prev")
         .join(adds, Seq("source"), "full_outer")
         .select(col("source"),
           (coalesce(col("__prev"), lit(0L)) +
             coalesce(col("__add"), lit(0L))).as("n_admitted"))
-        .write.mode("overwrite").parquet(s"${cfg.statePath}/batch=$batchId")
+      BatchTable(cfg.statePath).write(counters, batchId.toString)
 
       // 2. content dedup: index-wins vs prior batches; min media_id
       //    claims each NEW hash within the batch
-      val known = indexedHashes(spark, cfg, batchId)
+      val known = indexedHashes(spark, cfg.indexPath, batchId)
       val adm = admitted.where(col("admitted"))
       val decodable = adm.where(col("width") > 0)
       val claimants = decodable
@@ -142,8 +143,8 @@ object StreamingMediaIngest {
         .withColumn("keeper",
           col("__known").isNull && col("media_id") === col("__min_id"))
       // index append: this batch's new hashes (pure function again)
-      claimants.where(col("keeper")).select(col("pixel_md5"))
-        .write.mode("overwrite").parquet(s"${cfg.indexPath}/batch=$batchId")
+      BatchTable(cfg.indexPath).write(
+        claimants.where(col("keeper")).select(col("pixel_md5")), batchId.toString)
 
       // 3. verdict rows: every input row, with features for keepers
       val verdicts = sigs
@@ -157,8 +158,7 @@ object StreamingMediaIngest {
           col("width"), col("height"),
           when(coalesce(col("keeper"), lit(false)), col("sum_rgb"))
             .otherwise(lit(0L)).as("sum_rgb"))
-      verdicts.write.mode("overwrite")
-        .parquet(s"${cfg.outPath}/batch=$batchId")
+      BatchTable(cfg.outPath).write(verdicts, batchId.toString)
     }
   }
 

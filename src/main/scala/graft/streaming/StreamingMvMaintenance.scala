@@ -63,9 +63,9 @@ object StreamingMvMaintenance {
     // rollup it is maintaining — circular); same guard as
     // MaterializedAggregate.build
     graft.plans.MvCatalog.withSuspended {
-      batch.groupBy(groupCols.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .write.mode("overwrite").parquet(s"$mvPath/batch=$batchId")
+      graft.sources.BatchTable(mvPath).write(
+        batch.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*),
+        batchId.toString)
     }
   }
 
@@ -77,8 +77,8 @@ object StreamingMvMaintenance {
     * (schema-driven: sum over the sum_, nnz_ and cnt columns, min
     * over min_, max over max_, elementwise-max register fold over
     * hll_) and
-    * rewrites via [[graft.pipeline.IndexCompaction]]'s write-aside +
-    * directory-swap discipline (crash before the swap leaves the
+    * rewrites through [[graft.sources.BatchTable.compact]]'s write-aside
+    * + directory-swap discipline (crash before the swap leaves the
     * live rollup untouched; between the renames, readers fail loudly
     * rather than serve half a rollup). Navigation answers
     * IDENTICALLY before and after — the rule re-aggregates partials
@@ -94,13 +94,12 @@ object StreamingMvMaintenance {
     * Returns the number of batch directories folded.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, mvPath: String,
-      hllP: Int = 12, intoBatchId: String = "compacted"): Int =
+      hllP: Int = 12): Int =
     // suspended for the same reason as processBatch: the fold is an
     // aggregate over the rollup, which may itself be a registered
     // base in layered setups
     graft.plans.MvCatalog.withSuspended {
-      graft.pipeline.IndexCompaction.compact(spark, mvPath, intoBatchId,
-        Nil, None, foldPartials(_, hllP))
+      graft.sources.BatchTable(mvPath).compact(spark, foldPartials(_, hllP)).head
     }
 
   /** RETRACTION — the delete half of the IVM lifecycle (round-12
@@ -130,14 +129,13 @@ object StreamingMvMaintenance {
     * makes that explicit rather than approximate.
     *
     * Executed as a write-aside + directory-swap rewrite (the
-    * [[graft.pipeline.IndexCompaction]] discipline — crash-safe,
+    * [[graft.sources.BatchTable.compact]] discipline — crash-safe,
     * idempotent) that also compacts the surviving partials into one
-    * `batch=<intoBatchId>`. Returns the number of batch dirs folded.
+    * `batch=compacted`. Returns the number of batch dirs folded.
     * Re-register the MvDef afterwards, same as after a compaction.
     */
   def retract(spark: org.apache.spark.sql.SparkSession, mvPath: String,
-      predicateSql: String, hllP: Int = 12,
-      intoBatchId: String = "compacted"): Int = {
+      predicateSql: String, hllP: Int = 12): Int = {
     val df = spark.read.parquet(mvPath)
     val analyzed = df.where(expr(predicateSql)).queryExecution.analyzed
     val cond = analyzed.collectFirst {
@@ -158,10 +156,8 @@ object StreamingMvMaintenance {
       // NULL grouping value makes P NULL, and the base-side delete
       // ("remove rows WHERE P") keeps such rows, so the rollup must
       // keep their group too (bare `!P` would drop it)
-      graft.pipeline.IndexCompaction.compact(spark, mvPath, intoBatchId,
-        Nil, None,
-        d => foldPartials(
-          d.where(!coalesce(expr(predicateSql), lit(false))), hllP))
+      graft.sources.BatchTable(mvPath).compact(spark, d => foldPartials(
+        d.where(!coalesce(expr(predicateSql), lit(false))), hllP)).head
     }
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
+import graft.sources.BatchTable
+
 /** The COMPOSED online image–TEXT pair ingest pipeline — the
   * LAION-crawl shape ([[graft.pipeline.Multimodal.pairCuration]]'s
   * streaming twin, layered on [[StreamingMediaIngest]]'s topology),
@@ -73,25 +75,6 @@ object StreamingPairIngest {
       "caption")
   }
 
-  private def latestCounters(spark: org.apache.spark.sql.SparkSession,
-      cfg: Config, beforeBatch: Long): DataFrame = {
-    import spark.implicits._
-    val ids = BatchPartitions.priorIds(spark, cfg.statePath, beforeBatch)
-    if (ids.isEmpty)
-      Seq.empty[(String, Long)].toDF("source", "n_admitted")
-    else
-      spark.read.parquet(s"${cfg.statePath}/batch=${ids.max}")
-  }
-
-  private def indexedHashes(spark: org.apache.spark.sql.SparkSession,
-      cfg: Config, beforeBatch: Long): DataFrame = {
-    import spark.implicits._
-    val parts = BatchPartitions.priorIds(spark, cfg.indexPath, beforeBatch)
-      .map(id => s"${cfg.indexPath}/batch=$id")
-    if (parts.isEmpty) Seq.empty[String].toDF("pixel_md5")
-    else spark.read.parquet(parts: _*).select("pixel_md5")
-  }
-
   /** One micro-batch, replay-idempotent. */
   def processBatch(batch: Dataset[PairIn], batchId: Long,
       cfg: Config): Unit = {
@@ -109,7 +92,7 @@ object StreamingPairIngest {
           greatest(coalesce(size(split(trim(col("caption")), "\\s+")), lit(0)),
             lit(0)) >= cfg.minCaptionTokens)) { sigs =>
       // 1. admission: first-k per source by pair_id, counters carried
-      val prev = latestCounters(spark, cfg, batchId)
+      val prev = StreamingMediaIngest.latestCounters(spark, cfg.statePath, batchId)
       val wAdm = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source")).orderBy(col("pair_id"))
       val admitted = sigs
@@ -120,17 +103,17 @@ object StreamingPairIngest {
             cfg.quotaPerSource)
       val adds = admitted.groupBy(col("source"))
         .agg(sum(when(col("admitted"), 1L).otherwise(0L)).as("__add"))
-      prev.withColumnRenamed("n_admitted", "__prev")
+      val counters = prev.withColumnRenamed("n_admitted", "__prev")
         .join(adds, Seq("source"), "full_outer")
         .select(col("source"),
           (coalesce(col("__prev"), lit(0L)) +
             coalesce(col("__add"), lit(0L))).as("n_admitted"))
-        .write.mode("overwrite").parquet(s"${cfg.statePath}/batch=$batchId")
+      BatchTable(cfg.statePath).write(counters, batchId.toString)
 
       // 2. content dedup among SURVIVORS of admission + alignment +
       //    caption quality: index-wins vs prior batches, min pair_id
       //    claims each new hash within the batch
-      val known = indexedHashes(spark, cfg, batchId)
+      val known = StreamingMediaIngest.indexedHashes(spark, cfg.indexPath, batchId)
       val eligible = admitted.where(col("admitted") && col("aligned") &&
         col("caption_ok") && col("width") > 0)
       val claimants = eligible
@@ -140,8 +123,8 @@ object StreamingPairIngest {
             org.apache.spark.sql.expressions.Window.partitionBy(col("pixel_md5"))))
         .withColumn("keeper",
           col("__known").isNull && col("pair_id") === col("__min_id"))
-      claimants.where(col("keeper")).select(col("pixel_md5"))
-        .write.mode("overwrite").parquet(s"${cfg.indexPath}/batch=$batchId")
+      BatchTable(cfg.indexPath).write(
+        claimants.where(col("keeper")).select(col("pixel_md5")), batchId.toString)
 
       // 3. verdict rows: every input pair with the full audit trail
       val verdicts = sigs
@@ -154,8 +137,7 @@ object StreamingPairIngest {
           coalesce(col("keeper"), lit(false)).as("keeper"),
           (col("width") === 0).as("quarantined"),
           col("width"), col("height"))
-      verdicts.write.mode("overwrite")
-        .parquet(s"${cfg.outPath}/batch=$batchId")
+      BatchTable(cfg.outPath).write(verdicts, batchId.toString)
     }
   }
 

@@ -252,8 +252,8 @@ class PlanSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, dir)
     val centroids = pipeline.Similarity.sampleCentroids(emb, nlist = 8)
     pipeline.Similarity.writeIvfIndex(emb, centroids, dir2)
-    pipeline.Similarity.tombstoneIvfIndex(
-      emb.where(col("vec_id") % 7 === 0).select("vec_id"), dir2, batchId = "r")
+    pipeline.Similarity.ivfIndex(dir2).tombstone(
+      emb.where(col("vec_id") % 7 === 0).select("vec_id"), "r")
     val qVec = emb.where(col("vec_id") === 0L)
       .select("embedding").head().getSeq[Float](0).toArray
     val q = pipeline.Similarity.ivfTopKIndexed(spark, dir2, centroids, qVec,

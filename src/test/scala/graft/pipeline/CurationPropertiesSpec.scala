@@ -97,7 +97,7 @@ class CurationPropertiesSpec extends SparkSpec {
       val base = java.nio.file.Files.createTempDirectory(s"graft-prop-ev$i").toString
       val full = s"$base/full"; val ref = s"$base/ref"
       Dedup.writeLshIndex(df, full)
-      Dedup.tombstoneLshIndex(removedIds.toDF("doc_id"), full, batchId = "b")
+      Dedup.lshIndex(full).tombstone(removedIds.toDF("doc_id"), "b")
       Dedup.writeLshIndex(
         df.where(!org.apache.spark.sql.functions.col("doc_id")
           .isin(removedIds: _*)), ref)
@@ -110,7 +110,7 @@ class CurationPropertiesSpec extends SparkSpec {
             BigDecimal.RoundingMode.HALF_UP))).toSet
       assert(dups(full) === dups(ref), s"sample $i: eviction != rebuild")
       // physical apply preserves the law
-      Dedup.compactLshIndex(spark, full)
+      Dedup.lshIndex(full).compact(spark)
       assert(dups(full) === dups(ref), s"sample $i: post-compact drift")
     }
   }

@@ -83,7 +83,7 @@ class GraphAnnPropertiesSpec extends SparkSpec {
         m = 4, hubDegree = 16)
       val dead = emb.where(col("vec_id") % 7 === 3).select("vec_id")
       val deadIds = dead.collect().map(_.getLong(0)).toSet
-      GraphAnn.tombstoneIndex(dead, path, batchId = "t1")
+      GraphAnn.index(path).tombstone(dead, "t1")
       GraphAnn.compactIndex(spark, path, m = 4, hubDegree = 16)
       val edges = spark.read.parquet(path)
       // degree caps: knn <= 2m, hub <= hubDegree

@@ -382,7 +382,7 @@ class GraphAnnSpec extends SparkSpec {
 
     // tombstone: evicted ids must neither rank nor route
     val dead = Seq(1L, 3L).toDF("vec_id")
-    GraphAnn.tombstoneIndex(dead, path, batchId = "t1")
+    GraphAnn.index(path).tombstone(dead, "t1")
     val afterEvict = GraphAnn.searchAll(
       GraphAnn.readEdges(spark, path), hubs, queries, k = 10)
     assert(afterEvict.where(col("vec_id").isin(1L, 3L)).count() === 0L,

@@ -212,7 +212,7 @@ class IvfIndexSpec extends SparkSpec {
     val before = ids()
     assert(before.nonEmpty)
     val total = spark.read.parquet(path).count()
-    assert(Similarity.compactIvfIndex(spark, path) === 3)
+    assert(Similarity.ivfIndex(path).compact(spark).head === 3)
     val dirs = new java.io.File(path).listFiles
       .filter(f => f.isDirectory && f.getName.startsWith("batch="))
       .map(_.getName).toSeq
@@ -221,7 +221,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(spark.read.parquet(path).count() === total)
     assert(ids() === before)
     // idempotent: the single compacted batch rewrites to itself
-    assert(Similarity.compactIvfIndex(spark, path) === 1)
+    assert(Similarity.ivfIndex(path).compact(spark).head === 1)
     assert(ids() === before)
   }
 
@@ -231,7 +231,7 @@ class IvfIndexSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft-ivf-retr-ev").toString + "/idx"
     Similarity.writeIvfIndex(base, centroids, path, batchId = "base")
     val removed = (0 until 8).map(m => 0L * 100 + m)
-    Similarity.tombstoneIvfIndex(removed.toDF("vec_id"), path, batchId = "ret")
+    Similarity.ivfIndex(path).tombstone(removed.toDF("vec_id"), "ret")
     // drift arrives (the drifted batch appended) -> retrain fires; the
     // corpus passed is the SURVIVING corpus, per the contract
     val survivors = base.where(!col("vec_id").isin(removed: _*))
@@ -266,7 +266,7 @@ class IvfIndexSpec extends SparkSpec {
     Similarity.writeIvfIndex(
       base.where(!col("vec_id").isin(removed: _*)), centroids, rebuilt,
       batchId = "base")
-    Similarity.tombstoneIvfIndex(removed.toDF("vec_id"), path, batchId = "day1")
+    Similarity.ivfIndex(path).tombstone(removed.toDF("vec_id"), "day1")
     val qVec = member(0, 20)
     def ids(p: String) = topIds(Similarity.ivfTopKIndexed(spark, p, centroids,
       qVec, k = 8, nprobe = 8))
@@ -281,7 +281,7 @@ class IvfIndexSpec extends SparkSpec {
       centroids, eps = 0.95).collect()
     assert(verdicts.forall(_.getAs[Boolean]("keeper")))
     // compaction applies physically and clears the tombstones
-    assert(Similarity.compactIvfIndex(spark, path) === 1)
+    assert(Similarity.ivfIndex(path).compact(spark).head === 1)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + "_tombstones")))
     assert(ids(path) === evicted)
     assert(spark.read.parquet(path)

@@ -21,6 +21,17 @@ class LshIndexSpec extends SparkSpec {
     (14L, base.replace("quick", "swift"))) // near-dup of 10 inside the corpus
     .toDF("doc_id", "text")
 
+  /** Append `docs` to the index as `batchId`: the bands and shingles
+    * [[Dedup.writeLshIndex]] builds, written through the index seam.
+    */
+  private def append(docs: org.apache.spark.sql.DataFrame, path: String,
+      batchId: String): Unit = {
+    val shingled = Dedup.wordShingles(docs)
+    val index = Dedup.lshIndex(path)
+    index.write(Dedup.bandBuckets(Dedup.minHashSignatures(shingled)), batchId, "bands")
+    index.write(shingled, batchId, "shingles")
+  }
+
   private def batch = Seq(
     (21L, base.replace("lazy", "sleepy")), // near-dup of 10 and 14
     (23L, "entirely novel content with no overlap whatsoever to be found here"))
@@ -59,10 +70,10 @@ class LshIndexSpec extends SparkSpec {
   test("append maintenance: a later batch dedups against earlier batches too") {
     val path = java.nio.file.Files.createTempDirectory("graft-lsh-idx2").toString + "/idx"
     Dedup.writeLshIndex(corpus, path)
-    Dedup.appendToLshIndex(batch, path, batchId = "b1")
+    append(batch, path, "b1")
     // retried append of the SAME batch is idempotent: shingle rows
     // must not double (a doubled set_size deflates every jaccard)
-    Dedup.appendToLshIndex(batch, path, batchId = "b1")
+    append(batch, path, "b1")
     // batch 2 contains a near-dup of a BATCH-1 doc (21), invisible to
     // the original corpus index without the append
     val batch2 = Seq(
@@ -80,7 +91,7 @@ class LshIndexSpec extends SparkSpec {
   test("compactLshIndex: batch subdirs fold to one, dedup answers identically, idempotent") {
     val path = java.nio.file.Files.createTempDirectory("graft-lsh-idx3").toString + "/idx"
     Dedup.writeLshIndex(corpus, path)
-    Dedup.appendToLshIndex(batch, path, batchId = "b1")
+    append(batch, path, "b1")
     val probe = Seq((41L, base.replace("lazy", "sleepy").replace("cat", "kitten")))
       .toDF("doc_id", "text")
     def dups() = Dedup.nearDupsAgainstIndex(probe, path, threshold = 0.7)
@@ -89,7 +100,7 @@ class LshIndexSpec extends SparkSpec {
         r.getAs[Double]("jaccard"))).toSet
     val before = dups()
     assert(before.nonEmpty) // 41 near-dups doc 21 (batch) at least
-    assert(Dedup.compactLshIndex(spark, path) === ((2, 2)))
+    assert(Dedup.lshIndex(path).compact(spark) === Seq(2, 2))
     def batchDirs(sub: String) =
       new java.io.File(s"$path/$sub").listFiles
         .filter(f => f.isDirectory && f.getName.startsWith("batch="))
@@ -98,7 +109,7 @@ class LshIndexSpec extends SparkSpec {
     assert(batchDirs("shingles") === Seq("batch=compacted"))
     assert(dups() === before)
     // idempotent: the single compacted batch rewrites to itself
-    assert(Dedup.compactLshIndex(spark, path) === ((1, 1)))
+    assert(Dedup.lshIndex(path).compact(spark) === Seq(1, 1))
     assert(dups() === before)
   }
 
@@ -110,7 +121,7 @@ class LshIndexSpec extends SparkSpec {
     val survivors = corpus.where(col("doc_id") =!= 14L)
     Dedup.writeLshIndex(corpus, path)
     Dedup.writeLshIndex(survivors, rebuilt)
-    Dedup.tombstoneLshIndex(Seq(14L).toDF("doc_id"), path, batchId = "day1")
+    Dedup.lshIndex(path).tombstone(Seq(14L).toDF("doc_id"), "day1")
     // one edit from doc 14 (j ~ 0.74), two from doc 10 (j ~ 0.54):
     // at threshold 0.5 BOTH claim pre-eviction, only 10 after
     val probe = Seq((51L, base.replace("quick", "swift").replace("cat", "kitten")))
@@ -126,17 +137,17 @@ class LshIndexSpec extends SparkSpec {
     assert(evicted === dups(rebuilt))
     assert(evicted.exists(_._2 == 10L)) // survivor still claims
     // idempotent re-tombstone of the same batch
-    Dedup.tombstoneLshIndex(Seq(14L).toDF("doc_id"), path, batchId = "day1")
+    Dedup.lshIndex(path).tombstone(Seq(14L).toDF("doc_id"), "day1")
     assert(dups(path) === evicted)
     // compaction applies the eviction physically and clears tombstones
-    assert(Dedup.compactLshIndex(spark, path) === ((1, 1)))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "tombstones")))
+    assert(Dedup.lshIndex(path).compact(spark) === Seq(1, 1))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + "_tombstones")))
     assert(dups(path) === evicted)
     // physically gone: the shingle table no longer holds doc 14
     assert(spark.read.parquet(s"$path/shingles")
       .where(col("doc_id") === 14L).count() === 0L)
     // a fresh rebuild clears stale tombstones (re-added docs count again)
-    Dedup.tombstoneLshIndex(Seq(10L).toDF("doc_id"), path, batchId = "day2")
+    Dedup.lshIndex(path).tombstone(Seq(10L).toDF("doc_id"), "day2")
     Dedup.writeLshIndex(corpus, path)
     assert(dups(path).exists(_._2 == 10L))
   }

@@ -220,14 +220,6 @@ class ScaleStressSpec extends SparkSpec {
     v.groupBy(_.getAs[Long]("cluster_id")).foreach { case (_, rows) =>
       assert(rows.count(_.getAs[Boolean]("keeper")) === 1)
     }
-    val overflow = Similarity.semDedupOverflowCells(emb, nlist = 4,
-      maxCellSize = 100, dim = Some(dim)).collect()
-      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
-        r.getAs[Long]("population"))).toMap
-    assert(overflow.exists { case (k, pop) => k.isDefined && pop >= 5000L },
-      s"hot cell not reported: $overflow")
-    assert(overflow.get(None).contains(1L),
-      s"malformed-vector quarantine not reported: $overflow")
   }
 
   test("GlobalOrder ranks 1M rows without a driver-side bottleneck") {
